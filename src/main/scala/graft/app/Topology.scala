@@ -27,9 +27,12 @@ object Topology {
 
   /** ETL consumer (≙ consumer.py): source stream → decode/validate/enrich/
     * route → keyed PutRecords into the destination stream per route +
-    * dead-letter JSON under `errors/`. One foreachBatch pass per
-    * micro-batch; per-session_id order is preserved via (shard,
-    * sequence_number) ordering into the destination shards.
+    * dead-letter JSON under `errors/`. Each micro-batch is scanned and
+    * decoded once: its tagged projection is cached for the batch
+    * ([[SessionEtl.withTaggedBatch]]), one shuffle writes every destination
+    * stream, and the dead letters come from the same cache. Per-session_id
+    * order is preserved via (shard, sequence_number) ordering into the
+    * destination shards.
     */
   def startEtlConsumer(spark: SparkSession, sourceStream: String,
       destStreams: Map[String, String], errorsDir: String,
@@ -42,18 +45,13 @@ object Topology {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val outs = SessionEtl.transform(batch, dataCol = "data")
-        val order = Seq(col("shard"), col("sequence_number"))
-        destStreams.foreach { case (route, streamDir) =>
-          ShardedLogWriter.write(
-            outs.enriched.filter(col("route") === route),
-            streamDir, col("session_id"), col("data"), order)
+        SessionEtl.withTaggedBatch(batch) { tagged =>
+          ShardedLogWriter.writeRouted(SessionEtl.enriched(tagged), col("route"),
+            destStreams, col("session_id"), col("data"),
+            Seq(col("shard"), col("sequence_number")))
+          val dead = SessionEtl.deadLetter(tagged)
+          if (!dead.isEmpty) dead.write.mode(SaveMode.Append).json(errorsDir)
         }
-        val dead = outs.deadLetter
-        if (!dead.isEmpty)
-          dead.withColumn("payload", col("payload").cast("string"))
-            .write.mode(SaveMode.Append).json(errorsDir)
-        ()
       }
       .start()
   }

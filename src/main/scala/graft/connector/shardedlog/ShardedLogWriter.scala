@@ -8,11 +8,12 @@ import scala.collection.mutable
   * `PutRecord(..., PartitionKey=session_id)`, consumer.py:160-171, and the
   * reference's per-key ordering contract, README.md:244-256).
   *
-  * Scale design: rows are repartitioned by DESTINATION shard (so exactly
-  * one task appends to each shard file — single-writer discipline, no
-  * cross-task interleaving) and sorted within the partition by the caller's
-  * order columns (source shard + sequence number), which preserves per-key
-  * arrival order end-to-end. One shuffle, append-only IO.
+  * Scale design: rows are repartitioned by DESTINATION (stream, shard) (so
+  * exactly one task appends to each shard file — single-writer discipline,
+  * no cross-task interleaving) and sorted within the partition by the
+  * caller's order columns (source shard + sequence number), which preserves
+  * per-key arrival order end-to-end. One shuffle for every destination
+  * stream of a batch, append-only IO.
   */
 object ShardedLogWriter {
 
@@ -50,27 +51,48 @@ object ShardedLogWriter {
     * route only to OPEN shards (closed reshard parents take no records).
     */
   def write(batch: DataFrame, streamDir: String, keyCol: Column,
-      dataCol: Column, orderWithinKey: Seq[Column] = Nil): Unit = {
-    val meta = ShardedLog.shardMeta(streamDir)
-    val numOpen = meta.count(_.open)
-    require(numOpen > 0, s"stream $streamDir does not exist / has no open shards")
+      dataCol: Column, orderWithinKey: Seq[Column] = Nil): Unit =
+    writeRouted(batch, lit(streamDir), Map(streamDir -> streamDir), keyCol,
+      dataCol, orderWithinKey)
+
+  /** Write each row of `batch` into the stream `streams(route)`, where
+    * `route` is the row's `routeCol` value, in ONE job: one repartition over
+    * the union of every stream's open shards, keyed by (stream, shard), so
+    * each destination shard still has exactly one writing task. A row whose
+    * route has no entry in `streams` is not written. Placement and per-key
+    * order are those of [[write]].
+    */
+  def writeRouted(batch: DataFrame, routeCol: Column,
+      streams: Map[String, String], keyCol: Column, dataCol: Column,
+      orderWithinKey: Seq[Column] = Nil): Unit = {
+    val metas = streams.toSeq.map { case (route, dir) =>
+      val meta = ShardedLog.shardMeta(dir)
+      require(meta.exists(_.open), s"stream $dir does not exist / has no open shards")
+      (route, dir, meta)
+    }
+    if (metas.isEmpty) return
+    val dirs = metas.map(_._2).toArray
+    def byRoute(f: Int => Column): Column =
+      metas.indices.foldRight(lit(null))((i, rest) =>
+        when(routeCol === metas(i)._1, f(i)).otherwise(rest))
     val prepared = batch.select(
-      (Seq(keyCol.cast("string").as("__key"),
-        dataCol.cast("binary").as("__data"),
-        shardNameCol(keyCol, meta).as("__shard")) ++ orderWithinKey): _*)
+      (Seq(byRoute(i => lit(i)).as("__stream"),
+        byRoute(i => shardNameCol(keyCol, metas(i)._3)).as("__shard"),
+        keyCol.cast("string").as("__key"),
+        dataCol.cast("binary").as("__data")) ++ orderWithinKey): _*)
+      .filter(col("__stream").isNotNull)
     val sorted = prepared
-      .repartition(numOpen, col("__shard"))
-      .sortWithinPartitions((col("__shard") +: orderWithinKey): _*)
+      .repartition(metas.map(_._3.count(_.open)).sum, col("__stream"), col("__shard"))
+      .sortWithinPartitions((col("__stream") +: col("__shard") +: orderWithinKey): _*)
     sorted.foreachPartition { rows: Iterator[Row] =>
-      val buffers = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[(String, Array[Byte], Long)]]
+      val buffers = mutable.LinkedHashMap.empty[(Int, String), mutable.ArrayBuffer[(String, Array[Byte], Long)]]
       val now = System.currentTimeMillis()
       rows.foreach { r =>
-        val shard = r.getAs[String]("__shard")
-        buffers.getOrElseUpdate(shard, mutable.ArrayBuffer.empty) +=
-          ((r.getAs[String]("__key"), r.getAs[Array[Byte]]("__data"), now))
+        buffers.getOrElseUpdate((r.getInt(0), r.getString(1)), mutable.ArrayBuffer.empty) +=
+          ((r.getString(2), r.getAs[Array[Byte]](3), now))
       }
-      buffers.foreach { case (shard, recs) =>
-        ShardedLog.appendLines(streamDir, shard, recs.toSeq)
+      buffers.foreach { case ((stream, shard), recs) =>
+        ShardedLog.appendLines(dirs(stream), shard, recs.toSeq)
       }
     }
   }

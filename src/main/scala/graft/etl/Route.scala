@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * reaches here — nulls are dead-lettered first) goes International.
   * Reference: consumer.py:160-165, Solution.ipynb:522.
   *
-  * Expressed as a routing column feeding `partitionBy("route")` on the sink,
-  * which is the Spark-native form of "write to one of two destination
-  * streams": one pass over the data, no per-destination re-scan, and the
-  * disjoint split is total (every record lands in exactly one route).
+  * Expressed as a routing column that the sinks split on in one pass:
+  * `ShardedLogWriter.writeRouted` writes every destination stream in one
+  * shuffle, and the file sink uses `partitionBy("route")`. The disjoint
+  * split is total (every record lands in exactly one route).
   */
 object Route {
   val Usa = "usa"

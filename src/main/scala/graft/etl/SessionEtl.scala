@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Outputs of the ETL transform: the enriched+routed stream and the
   * dead-letter channel (reference: log-and-skip, consumer.py:178-185;
@@ -89,53 +90,100 @@ object SessionEtl {
       lit(", \"total_different_products\": "), tdp.cast("string"),
       lit("}"))
 
-  /** Full transform. `clock` is injectable for deterministic tests
-    * (default: evaluation-time `current_timestamp()`).
-    *
-    * Enriched output columns: every parsed session field, the four derived
-    * attributes, `route`, and `data` (the serialized output record — what
-    * the reference PutRecords to the destination stream). Pass-through
-    * input columns (e.g. shard/sequence metadata from the source) are kept.
+  /** Columns only a valid row carries: every parsed session field, the
+    * four derived attributes, `route`, and `data` (the serialized output
+    * record — what the reference PutRecords to the destination stream).
+    */
+  private val enrichedColumns: Seq[String] =
+    SessionSchemas.session.fieldNames.toSeq ++ Seq("processing_timestamp",
+      "overall_product_quantity", "overall_in_shopping_cart",
+      "total_different_products", "route", "data")
+
+  /** What the ETL sinks read from a tagged batch, besides the pass-through
+    * source columns: the writer's key and payload, and the dead letter.
+    */
+  private val sinkColumns: Seq[String] =
+    Seq("session_id", "route", "data", "payload", "error")
+
+  /** The whole consumer transform as ONE projection over the decoded input:
+    * pass-through input columns, then the [[enrichedColumns]] (set on a
+    * valid row only), then `payload` (the raw JSON) and `error` (the
+    * dead-letter class), both set on an invalid row only. `clock` is
+    * injectable for deterministic tests (default: evaluation-time
+    * `current_timestamp()`).
+    */
+  private def tag(raw: DataFrame, dataCol: String = "data",
+      clock: Column = current_timestamp()): DataFrame = {
+    val passThrough = raw.columns.filterNot(_ == dataCol).map(col).toSeq
+    val parsed = col("parsed")
+    val error =
+      when(isValid(parsed), lit(null).cast(StringType))
+        .when(parsed.isNull ||
+             (parsed.getField(SessionSchemas.corruptColumn).isNotNull &&
+              parsed.getField("session_id").isNull &&
+              parsed.getField("country").isNull &&
+              parsed.getField("browse_history").isNull),
+             lit("corrupt_json"))
+        .when(parsed.getField("session_id").isNull, lit("missing_session_id"))
+        .when(parsed.getField("country").isNull, lit("missing_country"))
+        .when(parsed.getField("browse_history").isNull, lit("missing_browse_history"))
+        .otherwise(lit("bad_quantity"))
+    // enrichment is evaluated on valid rows only: the reference never
+    // enriches a record it dead-letters
+    def ifValid(c: Column): Column = when(col("error").isNull, c)
+
+    val bh = parsed.getField("browse_history")
+    val derived = decode(raw, dataCol)
+      .withColumn("error", error)
+      .withColumn("processing_timestamp", ifValid(Enrich.processingTimestamp(clock)))
+      .withColumn("overall_product_quantity", ifValid(Enrich.overallProductQuantity(bh)))
+      .withColumn("overall_in_shopping_cart", ifValid(Enrich.overallInShoppingCart(bh)))
+      .withColumn("total_different_products", ifValid(Enrich.totalDifferentProducts(bh)))
+      .withColumn("route", ifValid(Route.route(parsed.getField("country"))))
+    val sessionFields = SessionSchemas.session.fieldNames.toSeq.map(f =>
+      ifValid(parsed.getField(f)).as(f))
+    derived.select(passThrough ++ sessionFields ++ Seq(
+      col("processing_timestamp"), col("overall_product_quantity"),
+      col("overall_in_shopping_cart"), col("total_different_products"),
+      col("route"),
+      ifValid(outputJson(col("raw_json"), col("processing_timestamp"),
+        col("overall_product_quantity"), col("overall_in_shopping_cart"),
+        col("total_different_products"))).as("data"),
+      when(col("error").isNotNull, col("raw_json")).as("payload"),
+      col("error")): _*)
+  }
+
+  /** The valid rows of a [[tag]]ged frame, without the dead-letter columns. */
+  def enriched(tagged: DataFrame): DataFrame =
+    tagged.filter(col("error").isNull).drop("payload", "error")
+
+  /** The invalid rows of a [[tag]]ged frame: the pass-through columns, then
+    * `payload` and `error`.
+    */
+  def deadLetter(tagged: DataFrame): DataFrame =
+    tagged.filter(col("error").isNotNull).drop(enrichedColumns: _*)
+
+  /** Full transform: both channels of one [[tag]]ged projection. Enriched
+    * output columns: pass-through input columns (e.g. shard/sequence
+    * metadata from the source), then the [[enrichedColumns]].
     */
   def transform(raw: DataFrame, dataCol: String = "data",
       clock: Column = current_timestamp()): EtlOutputs = {
-    val decoded = decode(raw, dataCol)
-    val passThrough = raw.columns.filterNot(_ == dataCol).map(col).toSeq
+    val tagged = tag(raw, dataCol, clock)
+    EtlOutputs(enriched(tagged), deadLetter(tagged))
+  }
 
-    val deadLetter = decoded
-      .filter(!isValid(col("parsed")))
-      .select(passThrough ++ Seq(
-        col("raw_json").as("payload"),
-        when(col("parsed").isNull ||
-             (col("parsed").getField(SessionSchemas.corruptColumn).isNotNull &&
-              col("parsed").getField("session_id").isNull &&
-              col("parsed").getField("country").isNull &&
-              col("parsed").getField("browse_history").isNull),
-             lit("corrupt_json"))
-          .when(col("parsed").getField("session_id").isNull, lit("missing_session_id"))
-          .when(col("parsed").getField("country").isNull, lit("missing_country"))
-          .when(col("parsed").getField("browse_history").isNull, lit("missing_browse_history"))
-          .otherwise(lit("bad_quantity")).as("error")): _*)
-
-    val bh = col("parsed").getField("browse_history")
-    val enriched0 = decoded
-      .filter(isValid(col("parsed")))
-      .withColumn("processing_timestamp", Enrich.processingTimestamp(clock))
-      .withColumn("overall_product_quantity", Enrich.overallProductQuantity(bh))
-      .withColumn("overall_in_shopping_cart", Enrich.overallInShoppingCart(bh))
-      .withColumn("total_different_products", Enrich.totalDifferentProducts(bh))
-      .withColumn("route", Route.route(col("parsed").getField("country")))
-      .withColumn("data", outputJson(col("raw_json"),
-        col("processing_timestamp"), col("overall_product_quantity"),
-        col("overall_in_shopping_cart"), col("total_different_products")))
-
-    val sessionFields = SessionSchemas.session.fieldNames.toSeq.map(f =>
-      col("parsed").getField(f).as(f))
-    val enriched = enriched0.select(passThrough ++ sessionFields ++ Seq(
-      col("processing_timestamp"), col("overall_product_quantity"),
-      col("overall_in_shopping_cart"), col("total_different_products"),
-      col("route"), col("data")): _*)
-
-    EtlOutputs(enriched, deadLetter)
+  /** Runs a `foreachBatch` body over the batch's tagged projection, narrowed
+    * to the pass-through and [[sinkColumns]] and persisted for the length of
+    * the body, so every sink of the batch reads one decode of one source
+    * scan. The cache is freed when the body returns or throws.
+    */
+  def withTaggedBatch(batch: DataFrame, dataCol: String = "data")(
+      body: DataFrame => Unit): Unit = {
+    val passThrough = batch.columns.filterNot(_ == dataCol).toSeq
+    val tagged = tag(batch, dataCol)
+      .select((passThrough ++ sinkColumns).map(col): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try body(tagged) finally tagged.unpersist(blocking = false)
   }
 }

@@ -8,7 +8,8 @@ import graft.etl.SessionEtl
 /** Streaming assembly of the reference's ETL consumer (SURVEY.md §2.7):
   *
   * source (any streaming DataFrame with a `data` payload column)
-  *   → [[SessionEtl.transform]] (decode, validate, enrich, route, serialize)
+  *   → [[SessionEtl.withTaggedBatch]] (decode, validate, enrich, route,
+  *     serialize — once per micro-batch, cached for both channels)
   *   → JSON file sink partitioned by `route` (≙ the two destination
   *     streams + Firehose delivery, `usa/` and `international/` dirs)
   *   → dead-letter JSON under `errors/` (≙ Firehose ErrorOutputPrefix).
@@ -42,23 +43,22 @@ object EtlStream {
       .queryName("graft-etl")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val outs = SessionEtl.transform(batch, dataCol)
-        val enriched =
-          if (keyPartitions > 0)
-            outs.enriched.repartition(keyPartitions, col("session_id"))
-          else outs.enriched
-        enriched
-          .select(col("route"), col("session_id"), col("data"))
-          .write.mode(SaveMode.Append).partitionBy("route")
-          .json(s"$outDir/data")
-        val dead = outs.deadLetter
-        // Only touch the errors/ dir when the batch actually dead-letters
-        // something (isEmpty is a cheap limit-1 scan on an already-planned
-        // filter).
-        if (!dead.isEmpty)
-          dead.write.mode(SaveMode.Append).json(s"$outDir/errors")
-        ()
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        SessionEtl.withTaggedBatch(batch, dataCol) { tagged =>
+          val valid = SessionEtl.enriched(tagged)
+          val enriched =
+            if (keyPartitions > 0) valid.repartition(keyPartitions, col("session_id"))
+            else valid
+          enriched
+            .select(col("route"), col("session_id"), col("data"))
+            .write.mode(SaveMode.Append).partitionBy("route")
+            .json(s"$outDir/data")
+          // Only touch the errors/ dir when the batch actually dead-letters
+          // something (isEmpty is a limit-1 scan of the cached batch).
+          val dead = SessionEtl.deadLetter(tagged)
+          if (!dead.isEmpty)
+            dead.write.mode(SaveMode.Append).json(s"$outDir/errors")
+        }
       }
       .start()
   }

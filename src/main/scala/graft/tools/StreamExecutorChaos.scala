@@ -23,7 +23,7 @@ import graft.streaming.EtlStream
   * actually happens):
   *
   *  - `shardedlog_topology` ([[Topology.startEtlConsumer]], the
-  *    PutRecords-style dest-stream path): `ShardedLogWriter.write` runs
+  *    PutRecords-style dest-stream path): `ShardedLogWriter.writeRouted` runs
   *    raw `appendLines` inside `foreachPartition`, so a task that is
   *    SIGKILLed AFTER appending but BEFORE registering completion is
   *    retried and re-appends — the documented AT-LEAST-ONCE contract

@@ -1,7 +1,7 @@
 package graft.app
 
-import java.nio.file.Files
-import org.apache.spark.sql.streaming.Trigger
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import graft.SparkTestBase
 import graft.connector.shardedlog.ShardedLog
 
@@ -64,5 +64,88 @@ class TopologySpec extends SparkTestBase {
     val delivered = spark.read.json(s"$base/s3-usa")
     assert(delivered.count() == 1)
     assert(delivered.select("partition_key").as[String].collect().head == "a1")
+  }
+
+  /** A micro-batch source of every channel: `usa`, `international` and one
+    * record per dead-letter class, keyed by session id.
+    */
+  private def mixedSource(base: String, n: Int): (String, Map[String, String]) = {
+    val src = s"$base/source"
+    ShardedLog.createStream(src, 2)
+    val dead = Seq(
+      "corrupt{{{" -> "corrupt_json",
+      """{"country": "USA", "browse_history": []}""" -> "missing_session_id",
+      """{"session_id": "d2", "browse_history": []}""" -> "missing_country",
+      """{"session_id": "d3", "country": "USA"}""" -> "missing_browse_history",
+      record("d4", "USA", 1, 1).replace("\"quantity\": 1", "\"quantity\": \"one\"") ->
+        "bad_quantity")
+    (0 until n - dead.size).foreach { i =>
+      val sid = s"s$i"
+      val country = if (i % 2 == 0) "USA" else "Peru"
+      ShardedLog.putRecord(src, sid, record(sid, country, i, 1).getBytes("UTF-8"))
+    }
+    dead.zipWithIndex.foreach { case ((payload, _), i) =>
+      ShardedLog.putRecord(src, s"d$i", payload.getBytes("UTF-8"))
+    }
+    (src, dead.toMap)
+  }
+
+  private def persistedRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("each micro-batch is scanned once and its cache is freed") {
+    val base = Files.createTempDirectory("graft-topo-once").toString
+    val n = 40
+    val (src, deadClasses) = mixedSource(base, n)
+    val usa = s"$base/usa"; val intl = s"$base/intl"
+    Seq(usa, intl).foreach(ShardedLog.createStream(_, 2))
+    val before = persistedRddIds
+    val etl = Topology.startEtlConsumer(spark, src,
+      Map("usa" -> usa, "international" -> intl),
+      errorsDir = s"$base/errors", checkpointDir = s"$base/ckpt",
+      trigger = Trigger.ProcessingTime(0), maxRecordsPerPoll = 8)
+    try etl.processAllAvailable() finally etl.stop()
+
+    // one source read per record, over several batches (2 shards × 8 cap)
+    assert(etl.recentProgress.count(_.numInputRows > 0) > 1)
+    assert(etl.recentProgress.map(_.numInputRows).sum == n)
+    assert(persistedRddIds -- before == Set.empty[Int])
+
+    def keys(dir: String) = ShardedLog.shardMeta(dir).flatMap(si =>
+      ShardedLog.read(dir, si.name, 0L, ShardedLog.endOffsets(dir)(si.name))
+        .map(_.partitionKey)).sorted
+    val valid = (0 until n - deadClasses.size).map(i => s"s$i")
+    assert(keys(usa) == valid.filter(_.drop(1).toInt % 2 == 0).sorted)
+    assert(keys(intl) == valid.filter(_.drop(1).toInt % 2 == 1).sorted)
+    val errs = spark.read.json(s"$base/errors")
+      .select($"payload", $"error").as[(String, String)].collect().toMap
+    assert(errs == deadClasses)
+    // dead-letter fields: the four pass-through columns, payload, error
+    val line = spark.read.textFile(s"$base/errors").first()
+    val fields = """"([a-z_]+)":""".r.findAllMatchIn(line).map(_.group(1)).toSeq
+    assert(fields == Seq("shard", "sequence_number", "arrival_timestamp",
+      "partition_key", "payload", "error"))
+  }
+
+  test("a failing batch body leaves nothing persisted") {
+    def failingRun(name: String, destStreams: String => Map[String, String],
+        errorsDir: String => String): Unit = {
+      val base = Files.createTempDirectory(s"graft-topo-$name").toString
+      val (src, _) = mixedSource(base, 10)
+      val before = persistedRddIds
+      val etl = Topology.startEtlConsumer(spark, src, destStreams(base),
+        errorsDir = errorsDir(base), checkpointDir = s"$base/ckpt",
+        trigger = Trigger.ProcessingTime(0))
+      try intercept[StreamingQueryException](etl.processAllAvailable())
+      finally etl.stop()
+      assert(persistedRddIds -- before == Set.empty[Int], name)
+    }
+    // before any job: the destination stream does not exist
+    failingRun("no-dest", base => Map("usa" -> s"$base/missing"), base => s"$base/errors")
+    // after the cached batch fed the route write: errors/ is a plain file
+    failingRun("bad-errors", { base =>
+      val usa = s"$base/usa"; val intl = s"$base/intl"
+      Seq(usa, intl).foreach(ShardedLog.createStream(_, 2))
+      Map("usa" -> usa, "international" -> intl)
+    }, base => Files.createFile(Paths.get(s"$base/errors")).toString)
   }
 }

@@ -451,4 +451,41 @@ class ShardedLogSpec extends SparkTestBase {
       assert(ns.sorted.sameElements(ns), s"out-of-order: ${byLog.mkString(",")}")
     }
   }
+
+  test("routed writer: two streams in one call, one of them split") {
+    val usa = newStream(2)
+    val intl = newStream(2)
+    ShardedLog.splitShard(intl, "shard-00000")
+    // production order n; "mars" has no destination stream
+    val src = (1 to 120).map { i =>
+      (s"sess-${i % 24}", i, Seq("usa", "international", "mars")(i % 24 % 3))
+    }
+    ShardedLogWriter.writeRouted(
+      src.toDF("key", "n", "route")
+        .withColumn("payload", concat($"key", lit(":"), $"n")),
+      $"route", Map("usa" -> usa, "international" -> intl),
+      $"key", $"payload".cast("binary"), orderWithinKey = Seq($"n"))
+
+    def rows(dir: String) = spark.read.format(ShardedLogSource.ShortName)
+      .option("path", dir).load()
+      .select($"shard", $"partition_key", $"sequence_number", $"data".cast("string"))
+      .collect().toSeq
+    Seq("usa" -> usa, "international" -> intl).foreach { case (route, dir) =>
+      val got = rows(dir)
+      val expected = src.filter(_._3 == route)
+      assert(got.map(_.getString(3)).sorted == expected.map(e => s"${e._1}:${e._2}").sorted,
+        s"$route holds exactly its route's rows")
+      got.foreach { r =>
+        assert(r.getString(0) == ShardedLog.openShardFor(dir, r.getString(1)))
+      }
+      // per key, within its destination shard: log order == production order
+      got.groupBy(r => (r.getString(0), r.getString(1))).foreach { case (k, rs) =>
+        val ns = rs.sortBy(_.getLong(2)).map(_.getString(3).split(":")(1).toInt)
+        assert(ns.sorted == ns, s"out of order in $k: $ns")
+      }
+    }
+    assert(ShardedLog.endOffsets(intl)("shard-00000") == 0L, "closed parent written")
+    assert(ShardedLog.endOffsets(usa).values.sum + ShardedLog.endOffsets(intl).values.sum ==
+      src.count(_._3 != "mars"), "a route without a stream must write nothing")
+  }
 }
