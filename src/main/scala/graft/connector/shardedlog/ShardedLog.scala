@@ -1,7 +1,7 @@
 package graft.connector.shardedlog
 
-import java.io.{File, FileOutputStream, OutputStreamWriter, RandomAccessFile}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.io.{File, RandomAccessFile}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 import scala.jdk.CollectionConverters._
@@ -26,6 +26,12 @@ import scala.jdk.CollectionConverters._
   *    (consumer.py:120,174);
   *  - records with the same partition key keep production order within
   *    their shard (single appender per shard).
+  *
+  * I/O path: [[appendLines]] is the one encoder (every writer calls it);
+  * it streams records into bounded byte chunks under the shard lock and
+  * leaves the shard's seq→byte index current, so a poll right after an
+  * append reads nothing. [[read]] parses lines at byte level from the
+  * nearest index anchor.
   */
 object ShardedLog {
 
@@ -217,8 +223,7 @@ object ShardedLog {
     // shardName(shardFor(key, n)) until a split/merge, after which writes
     // go to the owning child (closed parents take no new records).
     val shard = openShardFor(streamDir, key)
-    appendLines(streamDir, shard, Seq((key, data, arrivalMillis)))
-      match { case first => (shard, first) }
+    (shard, appendLines(streamDir, shard, Seq((key, data, arrivalMillis))))
   }
 
   /** Per-path intra-JVM monitors: `FileChannel.lock()` only serializes
@@ -237,28 +242,117 @@ object ShardedLog {
     * half-lines or duplicate sequence numbers.
     */
   def appendLines(streamDir: String, shard: String,
-      records: Seq[(String, Array[Byte], Long)]): Long = {
+      records: Seq[(String, Array[Byte], Long)]): Long =
+    appendLines(streamDir, shard, records.iterator)
+
+  /** The log's one encoder: appends `records` to ONE shard straight from
+    * the iterator, under the same monitor and file lock as the `Seq` form,
+    * and returns the first assigned sequence number. Lines are encoded as
+    * bytes into a buffer of [[ChunkBytes]] (or one line, if a record is
+    * larger) that is written whenever it fills, so memory is O(chunk)
+    * whatever the batch size. Only whole lines are written, so a writer
+    * that fails mid-batch leaves a prefix of the batch, never a torn line.
+    *
+    * Before it returns, the append stores the shard's new index entry
+    * (length, mtime, lines, anchors), so the next `endOffsets` or `read`
+    * does not rescan the bytes it just wrote.
+    */
+  def appendLines(streamDir: String, shard: String,
+      records: Iterator[(String, Array[Byte], Long)]): Long = {
     val file = new File(streamDir, shard)
-    val monitor = jvmLocks.computeIfAbsent(file.getCanonicalPath, _ => new Object)
+    val key = file.getCanonicalPath
+    val monitor = jvmLocks.computeIfAbsent(key, _ => new Object)
     monitor.synchronized {
       val raf = new RandomAccessFile(file, "rw")
       val lock = raf.getChannel.lock()
       try {
-        val firstSeq = countLines(file)
-        raf.seek(raf.length())
-        val sb = new StringBuilder
-        records.zipWithIndex.foreach { case ((key, data, arrival), i) =>
-          sb.append(firstSeq + i).append('\t')
-            .append(arrival).append('\t')
-            .append(Base64.getEncoder.encodeToString(key.getBytes(UTF_8))).append('\t')
-            .append(Base64.getEncoder.encodeToString(data)).append('\n')
-        }
-        raf.write(sb.toString.getBytes(UTF_8))
-        firstSeq
+        val before = refreshIndex(file)
+        val start = raf.length()
+        raf.seek(start)
+        // The index carries forward only from a newline-terminated end; an
+        // unterminated tail (external writer) is left to a full rescan.
+        val carry = start == 0L ||
+          (before.len == start && before.anchors.containsKey(before.lines))
+        val anchors = new java.util.TreeMap[Long, Long](before.anchors)
+        if (before.lines % IndexStep != 0L) anchors.remove(before.lines)
+        anchors.put(0L, 0L)
+        val out = new LineEncoder(raf)
+        var n = before.lines
+        var pos = start
+        try {
+          records.foreach { case (k, data, arrival) =>
+            pos += out.line(n, arrival, k.getBytes(UTF_8), data)
+            n += 1
+            if (n % IndexStep == 0L) anchors.put(n, pos)
+          }
+          out.flush()
+        } catch { case e: Throwable => indexCache.remove(key); throw e }
+        anchors.put(n, pos)
+        if (carry && raf.length() == pos)
+          indexCache.put(key, ShardIndex(pos, file.lastModified(), n,
+            java.util.Collections.unmodifiableNavigableMap(anchors)))
+        else indexCache.remove(key)
+        before.lines
       } finally {
         lock.release()
         raf.close()
       }
+    }
+  }
+
+  /** Bytes per append write; see [[appendLines]]. */
+  private val ChunkBytes = 1 << 16
+
+  /** Encodes records as log lines, `seq \t arrival \t base64(key) \t
+    * base64(data) \n` (standard alphabet, padded), into a buffer written
+    * to `raf` when the next line would not fit.
+    */
+  private final class LineEncoder(raf: RandomAccessFile) {
+    private var buf = new Array[Byte](ChunkBytes)
+    private var pos = 0
+    private var encoded = new Array[Byte](0)
+
+    /** Encodes one line; returns its length in bytes. */
+    def line(seq: Long, arrival: Long, key: Array[Byte],
+        data: Array[Byte]): Int = {
+      val max = 44 + 4 * ((key.length + 2) / 3) + 4 * ((data.length + 2) / 3)
+      if (pos + max > buf.length) {
+        flush()
+        if (max > buf.length) buf = new Array[Byte](max)
+      }
+      val start = pos
+      putLong(seq); put('\t')
+      putLong(arrival); put('\t')
+      putBase64(key); put('\t')
+      putBase64(data); put('\n')
+      pos - start
+    }
+
+    def flush(): Unit = if (pos > 0) { raf.write(buf, 0, pos); pos = 0 }
+
+    private def put(c: Char): Unit = { buf(pos) = c.toByte; pos += 1 }
+
+    private def putLong(v: Long): Unit =
+      if (v < 0) java.lang.Long.toString(v).foreach(put)
+      else {
+        var digits = 1
+        var t = v
+        while (t >= 10) { t /= 10; digits += 1 }
+        var i = pos + digits
+        var x = v
+        while (i > pos) { i -= 1; buf(i) = ('0' + x % 10).toByte; x /= 10 }
+        pos += digits
+      }
+
+    /** Standard Base64 (padded) of `src`, staged in `encoded`: the JDK
+      * encoder writes only at the start of its output array.
+      */
+    private def putBase64(src: Array[Byte]): Unit = {
+      val n = 4 * ((src.length + 2) / 3)
+      if (encoded.length < n) encoded = new Array[Byte](math.max(n, 2 * encoded.length))
+      Base64.getEncoder.encode(src, encoded)
+      System.arraycopy(encoded, 0, buf, pos, n)
+      pos += n
     }
   }
 
@@ -285,7 +379,9 @@ object ShardedLog {
     * mtime millisecond — is outside the supported single-writer-per-
     * shard topology, same as the sequence numbering itself. Entries are
     * only stored when length/mtime are unchanged across the scan, so a
-    * mid-scan append can never cache a torn value.
+    * mid-scan append can never cache a torn value. [[appendLines]] stores
+    * the entry for what it wrote itself, under the shard lock, from the
+    * line lengths it encoded.
     */
   private final case class ShardIndex(len: Long, mtime: Long, lines: Long,
       anchors: java.util.NavigableMap[Long, Long])
@@ -384,13 +480,125 @@ object ShardedLog {
       s -> countLines(new File(streamDir, s))
     }.toMap
 
+  /** Read buffer of a [[read]]; a shorter range gets a smaller one. */
+  private val ReadBytes = 1 << 16
+
+  /** Read buffer of a [[seqAtTimestamp]] probe, which needs one line. */
+  private val ProbeBytes = 1 << 13
+
+  /** Reads the lines of a shard file from byte `from` up to byte `until`
+    * into one buffer, which grows only for a line longer than itself.
+    * After [[next]] returns true the line is `buf[start, end)`, without its
+    * `\n`; bytes after the last `\n` before EOF count as a line too.
+    * Bytes read are counted into [[bytesScanned]].
+    */
+  private final class LineReader(file: File, from: Long, until: Long,
+      bufBytes: Int) {
+    private val raf = new RandomAccessFile(file, "r")
+    raf.seek(from)
+    private var remaining = until - from
+    var buf = new Array[Byte](bufBytes)
+    private var lo = 0 // unread bytes are buf[lo, hi)
+    private var hi = 0
+    var start = 0
+    var end = 0
+
+    def next(): Boolean = {
+      var i = lo
+      while (true) {
+        while (i < hi && buf(i) != '\n') i += 1
+        if (i < hi) { start = lo; end = i; lo = i + 1; return true }
+        val scanned = i - lo
+        if (!fill()) {
+          if (lo == hi) return false
+          start = lo; end = hi; lo = hi
+          return true
+        }
+        i = lo + scanned
+      }
+      false
+    }
+
+    /** Moves the unread bytes to the front, doubling the buffer when they
+      * fill it, and reads more; false at EOF or at `until`.
+      */
+    private def fill(): Boolean = {
+      if (remaining <= 0) return false
+      if (lo > 0) { System.arraycopy(buf, lo, buf, 0, hi - lo); hi -= lo; lo = 0 }
+      if (hi == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      val n = raf.read(buf, hi, math.min(buf.length - hi, remaining).toInt)
+      if (n <= 0) { remaining = 0; return false }
+      bytesScanned.addAndGet(n)
+      hi += n
+      remaining -= n
+      true
+    }
+
+    def close(): Unit = raf.close()
+  }
+
+  private def indexOf(b: Array[Byte], c: Char, from: Int, to: Int): Int = {
+    var i = from
+    while (i < to && b(i) != c) i += 1
+    if (i < to) i else -1
+  }
+
+  /** ASCII digits in `b[from, to)`; anything else goes through
+    * `Long.parseLong`, so a sign is accepted and garbage fails as before.
+    */
+  private def parseLong(b: Array[Byte], from: Int, to: Int): Long = {
+    var v = 0L
+    var i = from
+    if (to - from <= 18)
+      while (i < to && b(i) >= '0' && b(i) <= '9') { v = v * 10 + (b(i) - '0'); i += 1 }
+    if (i == to && to > from) v
+    else java.lang.Long.parseLong(new String(b, from, to - from, ISO_8859_1))
+  }
+
+  private def decodeBase64(b: Array[Byte], from: Int, to: Int): Array[Byte] = {
+    val out = Base64.getDecoder.decode(java.nio.ByteBuffer.wrap(b, from, to - from))
+    if (out.remaining == out.array.length) out.array
+    else java.util.Arrays.copyOf(out.array, out.remaining)
+  }
+
+  /** The end of the tab-terminated field that starts at `from`. */
+  private def fieldEnd(b: Array[Byte], from: Int, to: Int): Int = {
+    val t = indexOf(b, '\t', from, to)
+    if (t < 0) throw new IllegalArgumentException("fewer than 4 tab-separated fields")
+    t
+  }
+
+  /** One line `b[from, to)`: seq, arrival, base64(key), base64(data); the
+    * data field runs to the end of the line.
+    */
+  private def parseRecord(shard: String, b: Array[Byte], from: Int,
+      to: Int): Record = {
+    val t1 = fieldEnd(b, from, to)
+    val t2 = fieldEnd(b, t1 + 1, to)
+    val t3 = fieldEnd(b, t2 + 1, to)
+    Record(shard, parseLong(b, from, t1), parseLong(b, t1 + 1, t2),
+      new String(decodeBase64(b, t2 + 1, t3), UTF_8),
+      decodeBase64(b, t3 + 1, to))
+  }
+
+  /** Arrival millis of the line `b[from, to)`. */
+  private def parseArrival(b: Array[Byte], from: Int, to: Int): Long = {
+    val t1 = fieldEnd(b, from, to)
+    val t2 = indexOf(b, '\t', t1 + 1, to)
+    parseLong(b, t1 + 1, if (t2 < 0) to else t2)
+  }
+
   /** Read records of one shard in [startSeq, endSeq). Opens the file AT
-    * the floor byte-anchor for `startSeq` (OS-level `skip`, ≤ [[IndexStep]]
-    * lines of residual decode) instead of line-dropping from byte 0 — a
-    * long-running 2 s-trigger stream pays O(batch), not O(shard-so-far),
-    * per micro-batch. The stream is closed when the iterator is exhausted
-    * (the streaming source calls this per shard per micro-batch — relying
-    * on GC to release the handle would leak file descriptors).
+    * the floor byte-anchor for `startSeq` (≤ [[IndexStep]] lines of
+    * residual skip) instead of line-dropping from byte 0 — a long-running
+    * 2 s-trigger stream pays O(batch), not O(shard-so-far), per
+    * micro-batch — and reads no further than the ceiling anchor of
+    * `endSeq`. Lines are parsed at byte level: `\t` and `\n` are found in
+    * the read buffer, the numbers read as ASCII digits and the key and
+    * payload Base64-decoded from their byte ranges. The file is closed
+    * when the iterator is exhausted or fails (the streaming source calls
+    * this per shard per micro-batch — relying on GC to release the handle
+    * would leak file descriptors).
     */
   def read(streamDir: String, shard: String, startSeq: Long,
       endSeq: Long): Iterator[Record] = {
@@ -403,54 +611,53 @@ object ShardedLog {
     if (!file.exists()) throw new IllegalStateException(
       s"$shard in $streamDir: file missing but records [$startSeq,$endSeq) " +
         "were committed — shard file deleted?")
-    val anchor = refreshIndex(file).anchors.floorEntry(startSeq)
+    val idx = refreshIndex(file)
+    val anchor = idx.anchors.floorEntry(startSeq)
     val (anchorLine, anchorByte) =
       if (anchor == null) (0L, 0L) else (anchor.getKey.longValue(), anchor.getValue.longValue())
-    val in = Files.newInputStream(file.toPath)
-    val reader = try {
-      var skipped = 0L
-      while (skipped < anchorByte) {
-        val s = in.skip(anchorByte - skipped)
-        if (s <= 0) throw new java.io.IOException(
-          s"cannot seek $shard to byte $anchorByte")
-        skipped += s
-      }
-      new java.io.BufferedReader(new java.io.InputStreamReader(
-        countingStream(in), UTF_8))
-    } catch { case e: Throwable => in.close(); throw e }
-    val base = reader.lines().iterator().asScala
-      .drop((startSeq - anchorLine).toInt).take((endSeq - startSeq).toInt)
+    // line `endSeq` starts at or before its ceiling anchor, so the range
+    // ends there too
+    val ceiling = idx.anchors.ceilingEntry(endSeq)
+    val until = if (ceiling == null) Long.MaxValue else ceiling.getValue.longValue()
+    val lines = new LineReader(file, anchorByte, until,
+      math.max(256L, math.min(ReadBytes.toLong, until - anchorByte)).toInt)
+    val wanted = endSeq - startSeq
     new Iterator[Record] {
       private var open = true
+      private var skipped = false
+      private var pending = false // a line is loaded and not yet served
       private var served = 0L
-      private def closeOnce(): Unit = if (open) { open = false; reader.close() }
+      private def closeOnce(): Unit = if (open) { open = false; lines.close() }
       override def hasNext: Boolean = {
-        val h = open && base.hasNext
-        if (!h) {
+        if (!pending && open && served < wanted) {
+          if (!skipped) {
+            var k = startSeq - anchorLine
+            while (k > 0 && lines.next()) k -= 1
+            skipped = true
+          }
+          pending = lines.next()
+        }
+        if (!pending) {
           closeOnce()
           // Early exhaustion = the file lost lines between the offset
           // poll and this read (truncation). Silently under-serving a
           // committed range is data loss; fail the task instead.
-          if (served < endSeq - startSeq) throw new IllegalStateException(
+          if (served < wanted) throw new IllegalStateException(
             s"$shard in $streamDir: committed range [$startSeq,$endSeq) " +
               s"but only ${startSeq + served} records on disk — truncated?")
         }
-        h
+        pending
       }
       override def next(): Record = {
         if (!hasNext) throw new NoSuchElementException(s"$shard exhausted")
+        pending = false
         val expectedSeq = startSeq + served
-        val line = base.next()
-        val rec = try {
-          val parts = line.split("\t", 4)
-          Record(shard, parts(0).toLong, parts(1).toLong,
-            new String(Base64.getDecoder.decode(parts(2)), UTF_8),
-            Base64.getDecoder.decode(parts(3)))
-        } catch { case e: Exception =>
+        val rec = try parseRecord(shard, lines.buf, lines.start, lines.end)
+        catch { case e: Exception =>
           closeOnce()
           throw new IllegalStateException(
             s"$shard in $streamDir: corrupt record at seq $expectedSeq " +
-              s"(${line.length} bytes) — torn write or disk damage: $e", e)
+              s"(${lines.end - lines.start} bytes) — torn write or disk damage: $e", e)
         }
         // The embedded sequence number must equal the line's position —
         // a mismatch means the bytes at this offset are not the records
@@ -470,21 +677,6 @@ object ShardedLog {
     }
   }
 
-  /** Counts bytes actually read (skips are seeks, not reads) into
-    * [[bytesScanned]].
-    */
-  private def countingStream(in: java.io.InputStream): java.io.InputStream =
-    new java.io.FilterInputStream(in) {
-      override def read(): Int = {
-        val b = super.read(); if (b >= 0) bytesScanned.incrementAndGet(); b
-      }
-      override def read(b: Array[Byte], off: Int, len: Int): Int = {
-        val n = super.read(b, off, len)
-        if (n > 0) bytesScanned.addAndGet(n)
-        n
-      }
-    }
-
   /** First sequence at-or-after a timestamp (≙ AT_TIMESTAMP iterator).
     * Arrival times are non-decreasing within a shard (they are stamped
     * under the append lock — the same server-arrival-order guarantee the
@@ -499,18 +691,8 @@ object ShardedLog {
     val idx = refreshIndex(file)
     if (idx.lines == 0) return 0L
     def arrivalAt(byteOff: Long): Long = {
-      val in = Files.newInputStream(file.toPath)
-      try {
-        var skipped = 0L
-        while (skipped < byteOff) {
-          val s = in.skip(byteOff - skipped)
-          if (s <= 0) throw new java.io.IOException(s"cannot seek to $byteOff")
-          skipped += s
-        }
-        val r = new java.io.BufferedReader(
-          new java.io.InputStreamReader(countingStream(in), UTF_8))
-        r.readLine().split("\t", 3)(1).toLong
-      } finally in.close()
+      val r = new LineReader(file, byteOff, idx.len, ProbeBytes)
+      try { r.next(); parseArrival(r.buf, r.start, r.end) } finally r.close()
     }
     // last anchor whose FIRST record arrives before `millis` (anchors at
     // or past idx.lines carry no record to probe)
@@ -528,24 +710,12 @@ object ShardedLog {
       } else hi = mid - 1
     }
     // residual linear scan (≤ IndexStep lines) from the chosen anchor
-    val in = Files.newInputStream(file.toPath)
+    val r = new LineReader(file, startByte, idx.len, ProbeBytes)
     try {
-      var skipped = 0L
-      while (skipped < startByte) {
-        val s = in.skip(startByte - skipped)
-        if (s <= 0) throw new java.io.IOException(s"cannot seek to $startByte")
-        skipped += s
-      }
-      val r = new java.io.BufferedReader(
-        new java.io.InputStreamReader(countingStream(in), UTF_8))
       var seq = startLine
-      var found = -1L
-      var line = r.readLine()
-      while (line != null && found < 0) {
-        if (line.split("\t", 3)(1).toLong >= millis) found = seq
-        else { seq += 1; line = r.readLine() }
-      }
-      if (found < 0) idx.lines else found
-    } finally in.close()
+      while (seq < idx.lines && r.next() &&
+          parseArrival(r.buf, r.start, r.end) < millis) seq += 1
+      seq
+    } finally r.close()
   }
 }

@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -78,17 +80,39 @@ object SessionEtl {
     * input fields must pass through. We reproduce that with JSON-string
     * surgery on the original payload — append the four derived fields before
     * the closing brace — which preserves every unmodeled field byte-for-byte
-    * (SURVEY.md §7.4(1)).
+    * (SURVEY.md §7.4(1)). `isoTs` is the formatted processing timestamp.
     */
-  private def outputJson(rawJson: Column, ts: Column, opq: Column,
+  private def outputJson(rawJson: Column, isoTs: Column, opq: Column,
       oisc: Column, tdp: Column): Column =
     concat(
-      regexp_replace(rtrim(rawJson), "\\}$", ""),
-      lit(", \"processing_timestamp\": \""), Enrich.isoTimestamp(ts), lit("\""),
+      withoutClosingBrace(rawJson),
+      lit(", \"processing_timestamp\": \""), isoTs, lit("\""),
       lit(", \"overall_product_quantity\": "), opq.cast("string"),
       lit(", \"overall_in_shopping_cart\": "), oisc.cast("string"),
       lit(", \"total_different_products\": "), tdp.cast("string"),
       lit("}"))
+
+  /** Line terminators before which Java's `$` also matches at the end of
+    * the input.
+    */
+  private val FinalTerminators = Seq("\n", "\r\n", "\r", "\u0085", "\u2028", "\u2029")
+
+  /** `regexp_replace(rtrim(json), "\\}$", "")` without the regex: drops a
+    * `}` that ends the right-trimmed payload or precedes one final line
+    * terminator, which stays. Built from functions that are compiled into
+    * the projection, and cut by byte offsets (`octet_length`, binary
+    * `substr`): character offsets would walk the UTF-8 payload twice.
+    */
+  private[etl] def withoutClosingBrace(json: Column): Column = {
+    val trimmed = rtrim(json)
+    val bytes = octet_length(trimmed)
+    ("" +: FinalTerminators).foldRight(trimmed) { (t, rest) =>
+      val suffix = "}" + t
+      val keep = trimmed.cast("binary")
+        .substr(lit(1), bytes - suffix.getBytes(UTF_8).length).cast("string")
+      when(trimmed.endsWith(suffix), concat(keep, lit(t))).otherwise(rest)
+    }
+  }
 
   /** Columns only a valid row carries: every parsed session field, the
     * four derived attributes, `route`, and `data` (the serialized output
@@ -146,7 +170,11 @@ object SessionEtl {
       col("processing_timestamp"), col("overall_product_quantity"),
       col("overall_in_shopping_cart"), col("total_different_products"),
       col("route"),
-      ifValid(outputJson(col("raw_json"), col("processing_timestamp"),
+      // `clock` formatted once: a timestamp literal (a micro-batch's
+      // current_timestamp()) folds to a string literal, which generated
+      // code takes by reference, so the next batch reuses the compiled
+      // projection instead of compiling one with its own clock inlined
+      ifValid(outputJson(col("raw_json"), Enrich.isoTimestamp(clock),
         col("overall_product_quantity"), col("overall_in_shopping_cart"),
         col("total_different_products"))).as("data"),
       when(col("error").isNotNull, col("raw_json")).as("payload"),
@@ -176,13 +204,17 @@ object SessionEtl {
   /** Runs a `foreachBatch` body over the batch's tagged projection, narrowed
     * to the pass-through and [[sinkColumns]] and persisted for the length of
     * the body, so every sink of the batch reads one decode of one source
-    * scan. The cache is freed when the body returns or throws.
+    * scan. The cache is freed when the body returns or throws. `data` is
+    * cached as the UTF-8 binary the log writer appends: the columnar cache
+    * stores a binary column as is, where a string column pays dictionary
+    * and run-length statistics over values that are all distinct.
     */
   def withTaggedBatch(batch: DataFrame, dataCol: String = "data")(
       body: DataFrame => Unit): Unit = {
     val passThrough = batch.columns.filterNot(_ == dataCol).toSeq
     val tagged = tag(batch, dataCol)
-      .select((passThrough ++ sinkColumns).map(col): _*)
+      .select((passThrough ++ sinkColumns).map(c =>
+        if (c == "data") col(c).cast("binary").as(c) else col(c)): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try body(tagged) finally tagged.unpersist(blocking = false)
   }

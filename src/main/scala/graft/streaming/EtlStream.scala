@@ -50,7 +50,7 @@ object EtlStream {
             if (keyPartitions > 0) valid.repartition(keyPartitions, col("session_id"))
             else valid
           enriched
-            .select(col("route"), col("session_id"), col("data"))
+            .select(col("route"), col("session_id"), col("data").cast("string").as("data"))
             .write.mode(SaveMode.Append).partitionBy("route")
             .json(s"$outDir/data")
           // Only touch the errors/ dir when the batch actually dead-letters

@@ -29,9 +29,10 @@ import graft.streaming.EtlStream
   *    retried and re-appends — the documented AT-LEAST-ONCE contract
   *    (ShardedLogWrite.scala "at-least-once across epoch retries").
   *    Required invariant: ZERO LOSS (every produced key delivered);
-  *    duplicates are recorded, and each observed duplicate must be a
-  *    whole re-appended batch, never a torn record (the per-shard file
-  *    lock guarantees line atomicity).
+  *    duplicates are recorded: the killed task may have appended a
+  *    prefix of its sorted run (whole lines, written in chunks) that the
+  *    retry appends again, never a torn record (the per-shard file lock
+  *    and line-aligned chunk writes guarantee line atomicity).
   *  - `etlstream_filesink` ([[EtlStream.start]], the exactly-once
   *    upgrade): the JSON file sink goes through Spark's output committer
   *    (task temp files + rename on commit), so a killed task's partial

@@ -148,4 +148,34 @@ class TopologySpec extends SparkTestBase {
       Map("usa" -> usa, "international" -> intl)
     }, base => Files.createFile(Paths.get(s"$base/errors")).toString)
   }
+
+  test("later micro-batches reuse the compiled ETL code") {
+    val base = Files.createTempDirectory("graft-topo-codegen").toString
+    val src = s"$base/source"; val usa = s"$base/usa"; val intl = s"$base/intl"
+    Seq(src, usa, intl).foreach(ShardedLog.createStream(_, 2))
+    def produce(round: Int): Unit = (0 until 400).foreach { i =>
+      val sid = s"r$round-$i"
+      ShardedLog.putRecord(src, sid,
+        record(sid, if (i % 2 == 0) "USA" else "Chile", i % 7, 1).getBytes("UTF-8"))
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    produce(0)
+    val etl = Topology.startEtlConsumer(spark, src,
+      Map("usa" -> usa, "international" -> intl),
+      errorsDir = s"$base/errors", checkpointDir = s"$base/ckpt",
+      trigger = Trigger.ProcessingTime(0), maxRecordsPerPoll = 1000)
+    try {
+      etl.processAllAvailable()
+      val before = compiles.getCount
+      (1 to 3).foreach { round =>
+        Thread.sleep(5) // a later batch clock
+        produce(round)
+        etl.processAllAvailable()
+      }
+      assert(compiles.getCount - before == 0L,
+        "a micro-batch compiled code the previous batch had compiled")
+    } finally etl.stop()
+    assert(etl.recentProgress.count(_.numInputRows > 0) >= 4)
+    assert(ShardedLog.endOffsets(usa).values.sum + ShardedLog.endOffsets(intl).values.sum == 1600L)
+  }
 }

@@ -1,6 +1,9 @@
 package graft.connector
 
 import java.nio.file.Files
+import java.util.Base64
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkTestBase
@@ -487,5 +490,97 @@ class ShardedLogSpec extends SparkTestBase {
     assert(ShardedLog.endOffsets(intl)("shard-00000") == 0L, "closed parent written")
     assert(ShardedLog.endOffsets(usa).values.sum + ShardedLog.endOffsets(intl).values.sum ==
       src.count(_._3 != "mars"), "a route without a stream must write nothing")
+  }
+
+  test("routed writer: two streams × two shards are appended by four distinct tasks") {
+    val usa = newStream(2)
+    val intl = newStream(2)
+    val src = (1 to 400).map(i => (s"sess-$i", i, if (i % 2 == 0) "usa" else "international"))
+    val group = s"routed-width-${System.nanoTime()}"
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val writers = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    // result tasks of the write that read shuffled rows; a marker job
+    // started after the write proves the bus has delivered its task ends
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) e.stageIds.foreach(stages.add)
+        if (g == s"$group-marker") drained.countDown()
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskType == "ResultTask" &&
+            e.taskMetrics != null && e.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+          writers.add(e.taskInfo.index)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "routed writer width")
+      ShardedLogWriter.writeRouted(
+        src.toDF("key", "n", "route").withColumn("payload", concat($"key", lit(":"), $"n")),
+        $"route", Map("usa" -> usa, "international" -> intl),
+        $"key", $"payload".cast("binary"), orderWithinKey = Seq($"n"))
+      sc.setJobGroup(s"$group-marker", "listener bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    Seq(usa, intl).foreach { dir =>
+      assert(ShardedLog.endOffsets(dir).values.forall(_ > 0L), s"$dir: a shard got no rows")
+    }
+    assert(writers.size == 4, s"appending tasks (reduce partitions): $writers")
+  }
+
+  test("endOffsets right after appendLines reads no bytes") {
+    val dir = newStream(1)
+    val recs = (0 until 1000).map(i => (s"k-$i", s"payload-$i".getBytes("UTF-8"), 1000L + i))
+    ShardedLog.appendLines(dir, "shard-00000", recs.take(300))
+    assert(ShardedLog.endOffsets(dir)("shard-00000") == 300L)
+    ShardedLog.appendLines(dir, "shard-00000", recs.drop(300).iterator)
+    val before = ShardedLog.bytesScanned.get()
+    assert(ShardedLog.endOffsets(dir)("shard-00000") == 1000L)
+    assert(ShardedLog.bytesScanned.get() - before == 0L,
+      "the append left the shard index stale")
+    // the index the appender stored serves reads from its anchors
+    val got = ShardedLog.read(dir, "shard-00000", 700L, 1000L).toSeq
+    assert(got.map(_.sequenceNumber) == (700L until 1000L))
+    assert(got.map(r => (r.partitionKey, new String(r.data, "UTF-8"), r.arrivalMillis)) ==
+      recs.drop(700).map(r => (r._1, new String(r._2, "UTF-8"), r._3)))
+    assert(ShardedLog.seqAtTimestamp(dir, "shard-00000", 1000L + 555) == 555L)
+  }
+
+  test("read round trip: tabs, line breaks, non-ASCII and empty payloads") {
+    val dir = newStream(1)
+    val big = "é\t\n" * 25000 // larger than an append chunk
+    val odd = Seq(
+      "tab\tkey" -> "a\tb\tc",
+      "nl\nkey" -> "line1\nline2\n",
+      "cr\rkey" -> "\r\n\r",
+      "ключ-日本" -> "données — ñ, 日本語, 🚀",
+      "empty" -> "",
+      "" -> "empty key")
+    val recs = (0 until 600).map { i =>
+      val (k, d) = if (i == 100) ("big", big) else odd(i % odd.size)
+      (k, d.getBytes("UTF-8"), if (i == 3) -5L else 1000L + i)
+    }
+    ShardedLog.appendLines(dir, "shard-00000", recs.take(250))
+    ShardedLog.appendLines(dir, "shard-00000", recs.drop(250).iterator)
+    // on-disk format: seq \t arrival \t base64(key) \t base64(data) \n
+    val enc = Base64.getEncoder
+    val expected = recs.zipWithIndex.map { case ((k, d, at), i) =>
+      s"$i\t$at\t${enc.encodeToString(k.getBytes("UTF-8"))}\t${enc.encodeToString(d)}\n"
+    }.mkString
+    assert(new String(Files.readAllBytes(new java.io.File(dir, "shard-00000").toPath),
+      "UTF-8") == expected)
+    Seq(0L -> 600L, 249L -> 251L, 256L -> 600L, 599L -> 600L).foreach { case (from, until) =>
+      val got = ShardedLog.read(dir, "shard-00000", from, until).toSeq
+      val want = recs.slice(from.toInt, until.toInt)
+      assert(got.map(_.sequenceNumber) == (from until until))
+      assert(got.map(r => (r.partitionKey, new String(r.data, "UTF-8"), r.arrivalMillis)) ==
+        want.map(r => (r._1, new String(r._2, "UTF-8"), r._3)), s"[$from, $until)")
+    }
   }
 }

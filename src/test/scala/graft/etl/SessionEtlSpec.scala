@@ -136,4 +136,20 @@ class SessionEtlSpec extends SparkTestBase {
     val r = out.enriched.collect().head
     assert(r.getAs[String]("shard") == "s-0" && r.getAs[Long]("seq") == 7L)
   }
+
+  test("closing-brace surgery matches the regex it replaced") {
+    val body = """{"session_id": "a1", "n": 1"""
+    val inputs = Seq(s"$body}", s"$body} ", s"$body}  ", s"$body}\n", s"$body}\r\n",
+      s"$body}\r", s"$body}\u0085", s"$body}\u2028", s"$body}\u2029", s"$body}}",
+      s"$body}\n\n", s"$body} \n", s"$body}\n ", s"$body\n}", "}", "", body,
+      s"$body}x", null)
+    val got = inputs.toDF("raw")
+      .select(SessionEtl.withoutClosingBrace($"raw"),
+        regexp_replace(rtrim($"raw"), "\\}$", ""))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    inputs.zip(got).foreach { case (in, (surgery, regex)) =>
+      assert(surgery == regex, s"input ${Option(in).map(_.map(_.toInt))}")
+    }
+    assert(got.head._1 == body && got(3)._1 == s"$body\n")
+  }
 }
