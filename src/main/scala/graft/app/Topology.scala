@@ -27,10 +27,14 @@ object Topology {
 
   /** ETL consumer (≙ consumer.py): source stream → decode/validate/enrich/
     * route → keyed PutRecords into the destination stream per route +
-    * dead-letter JSON under `errors/`. Each micro-batch is scanned and
-    * decoded once: its tagged projection is cached for the batch
-    * ([[SessionEtl.withTaggedBatch]]), one shuffle writes every destination
-    * stream, and the dead letters come from the same cache. Per-session_id
+    * dead-letter JSON under `errors/`. Each micro-batch is one pass: its
+    * tagged projection ([[SessionEtl.sinkProjection]], not cached) feeds
+    * the shuffle of [[ShardedLogWriter.writeRouted]] directly, which
+    * appends every destination stream and carries the dead letters to one
+    * extra reduce partition. `errors/` is written from that partition
+    * after the appends, reading the shuffle's map output, and only when
+    * the batch has dead letters: the source is scanned and decoded once,
+    * in two Spark jobs per batch, three with dead letters. Per-session_id
     * order is preserved via (shard, sequence_number) ordering into the
     * destination shards.
     */
@@ -45,13 +49,13 @@ object Topology {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        SessionEtl.withTaggedBatch(batch) { tagged =>
-          ShardedLogWriter.writeRouted(SessionEtl.enriched(tagged), col("route"),
-            destStreams, col("session_id"), col("data"),
-            Seq(col("shard"), col("sequence_number")))
-          val dead = SessionEtl.deadLetter(tagged)
-          if (!dead.isEmpty) dead.write.mode(SaveMode.Append).json(errorsDir)
-        }
+        val tagged = SessionEtl.sinkProjection(batch)
+        val deadLetters = ShardedLogWriter.SideOutput(SessionEtl.isDeadLetter,
+          SessionEtl.deadLetterColumns(tagged),
+          _.write.mode(SaveMode.Append).json(errorsDir))
+        ShardedLogWriter.writeRouted(tagged, col("route"), destStreams,
+          col("session_id"), col("data"), Seq(col("shard"), col("sequence_number")),
+          Some(deadLetters))
       }
       .start()
   }

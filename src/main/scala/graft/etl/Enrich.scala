@@ -4,9 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The reference's four per-record derived attributes (SURVEY.md §2.2
-  * P1–P4), as pure `Column` functions — everything stays inside Catalyst
-  * whole-stage codegen (higher-order array functions, no UDFs), so the hot
-  * path is a single fused projection regardless of scale.
+  * P1–P4), as pure `Column` functions over built-in expressions (no UDFs),
+  * so they run inside the ETL's one projection regardless of scale. The
+  * higher-order array functions (`aggregate`, `filter`) are not compiled:
+  * on Spark 4.1.2 `ArrayAggregate` and `ArrayFilter` implement
+  * `CodegenFallback`, so the generated projection calls their interpreted
+  * `eval` per row.
   *
   * Reference semantics reproduced exactly:
   *  - consumer.py:126-129  processing_timestamp = now(), ISO-8601 serialized

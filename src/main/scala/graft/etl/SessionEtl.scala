@@ -21,9 +21,14 @@ final case class EtlOutputs(enriched: DataFrame, deadLetter: DataFrame)
   * Works identically on a batch DataFrame and a streaming one (pure
   * projections/filters — no state, no shuffle), so the same code path backs
   * unit tests, the golden E2E, and the production streaming topology. At
-  * scale this is a single whole-stage-codegen map stage: throughput is
-  * bounded by scan + JSON parse, and parallelism is the source's partition
-  * count (shards).
+  * scale it is one map stage whose parallelism is the source's partition
+  * count (shards). It is not one fused loop of generated code: `from_json`
+  * builds an `InputStreamReader`-based Jackson parser per record
+  * (`CreateJacksonParser.utf8String`), a numeric `quantity` token is
+  * copied through a new `JsonGenerator` per value because the schema types
+  * it as a string, and the array functions of [[Enrich]] and [[isValid]]
+  * (`aggregate`, `filter`, `forall`) are `CodegenFallback` expressions,
+  * evaluated by the interpreter from inside the generated projection.
   */
 object SessionEtl {
 
@@ -181,6 +186,9 @@ object SessionEtl {
       col("error")): _*)
   }
 
+  /** True on the invalid rows of a [[tag]]ged frame. */
+  val isDeadLetter: Column = col("error").isNotNull
+
   /** The valid rows of a [[tag]]ged frame, without the dead-letter columns. */
   def enriched(tagged: DataFrame): DataFrame =
     tagged.filter(col("error").isNull).drop("payload", "error")
@@ -189,7 +197,11 @@ object SessionEtl {
     * `payload` and `error`.
     */
   def deadLetter(tagged: DataFrame): DataFrame =
-    tagged.filter(col("error").isNotNull).drop(enrichedColumns: _*)
+    tagged.filter(isDeadLetter).drop(enrichedColumns: _*)
+
+  /** The columns of [[deadLetter]]. */
+  def deadLetterColumns(tagged: DataFrame): Seq[String] =
+    tagged.columns.toSeq.filterNot(enrichedColumns.contains)
 
   /** Full transform: both channels of one [[tag]]ged projection. Enriched
     * output columns: pass-through input columns (e.g. shard/sequence
@@ -201,21 +213,26 @@ object SessionEtl {
     EtlOutputs(enriched(tagged), deadLetter(tagged))
   }
 
-  /** Runs a `foreachBatch` body over the batch's tagged projection, narrowed
-    * to the pass-through and [[sinkColumns]] and persisted for the length of
-    * the body, so every sink of the batch reads one decode of one source
-    * scan. The cache is freed when the body returns or throws. `data` is
-    * cached as the UTF-8 binary the log writer appends: the columnar cache
+  /** The batch's [[tag]]ged projection narrowed to the pass-through and
+    * [[sinkColumns]], what the ETL sinks read. `data` is the UTF-8 binary
+    * the log writer appends.
+    */
+  def sinkProjection(batch: DataFrame, dataCol: String = "data"): DataFrame = {
+    val passThrough = batch.columns.filterNot(_ == dataCol).toSeq
+    tag(batch, dataCol).select((passThrough ++ sinkColumns).map(c =>
+      if (c == "data") col(c).cast("binary").as(c) else col(c)): _*)
+  }
+
+  /** Runs a `foreachBatch` body over the batch's [[sinkProjection]],
+    * persisted for the length of the body, so every sink of the batch reads
+    * one decode of one source scan. The cache is freed when the body
+    * returns or throws. `data` is cached as binary: the columnar cache
     * stores a binary column as is, where a string column pays dictionary
     * and run-length statistics over values that are all distinct.
     */
   def withTaggedBatch(batch: DataFrame, dataCol: String = "data")(
       body: DataFrame => Unit): Unit = {
-    val passThrough = batch.columns.filterNot(_ == dataCol).toSeq
-    val tagged = tag(batch, dataCol)
-      .select((passThrough ++ sinkColumns).map(c =>
-        if (c == "data") col(c).cast("binary").as(c) else col(c)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tagged = sinkProjection(batch, dataCol).persist(StorageLevel.MEMORY_AND_DISK)
     try body(tagged) finally tagged.unpersist(blocking = false)
   }
 }

@@ -81,8 +81,8 @@ object WriteScaleProof {
     // over the distinct keys — deterministic, unlike the former
     // probabilistic >=10·n floor, which turned a healthy run into a hard
     // require failure ~0.15% of the time at the minimum qualifying key
-    // mass (r16 advice). A fresh never-resharded n-shard stream's
-    // shardNameCol is placement-identical to shardIndexCol (see
+    // mass (r16 advice). On a fresh never-resharded n-shard stream the
+    // writer's hash-range placement is identical to shardIndexCol (see
     // ShardedLogWriter), so the exact shard set each write must touch is
     // computable before any write happens.
     val expectedShards = shardConfigs.map { n =>

@@ -1,6 +1,10 @@
 package graft.app
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import graft.SparkTestBase
 import graft.connector.shardedlog.ShardedLog
@@ -66,19 +70,21 @@ class TopologySpec extends SparkTestBase {
     assert(delivered.select("partition_key").as[String].collect().head == "a1")
   }
 
+  /** One payload per dead-letter class, with its class. */
+  private val dead = Seq(
+    "corrupt{{{" -> "corrupt_json",
+    """{"country": "USA", "browse_history": []}""" -> "missing_session_id",
+    """{"session_id": "d2", "browse_history": []}""" -> "missing_country",
+    """{"session_id": "d3", "country": "USA"}""" -> "missing_browse_history",
+    record("d4", "USA", 1, 1).replace("\"quantity\": 1", "\"quantity\": \"one\"") ->
+      "bad_quantity")
+
   /** A micro-batch source of every channel: `usa`, `international` and one
     * record per dead-letter class, keyed by session id.
     */
   private def mixedSource(base: String, n: Int): (String, Map[String, String]) = {
     val src = s"$base/source"
     ShardedLog.createStream(src, 2)
-    val dead = Seq(
-      "corrupt{{{" -> "corrupt_json",
-      """{"country": "USA", "browse_history": []}""" -> "missing_session_id",
-      """{"session_id": "d2", "browse_history": []}""" -> "missing_country",
-      """{"session_id": "d3", "country": "USA"}""" -> "missing_browse_history",
-      record("d4", "USA", 1, 1).replace("\"quantity\": 1", "\"quantity\": \"one\"") ->
-        "bad_quantity")
     (0 until n - dead.size).foreach { i =>
       val sid = s"s$i"
       val country = if (i % 2 == 0) "USA" else "Peru"
@@ -147,6 +153,70 @@ class TopologySpec extends SparkTestBase {
       Seq(usa, intl).foreach(ShardedLog.createStream(_, 2))
       Map("usa" -> usa, "international" -> intl)
     }, base => Files.createFile(Paths.get(s"$base/errors")).toString)
+  }
+
+  test("a micro-batch runs two Spark jobs, three with dead letters") {
+    val base = Files.createTempDirectory("graft-topo-jobs").toString
+    val src = s"$base/source"; val usa = s"$base/usa"; val intl = s"$base/intl"
+    val errors = new java.io.File(s"$base/errors")
+    Seq(src, usa, intl).foreach(ShardedLog.createStream(_, 2))
+    // jobs per batch id of the ETL query, read from the job properties
+    val queryId = new AtomicReference[String]()
+    val jobs = new ConcurrentHashMap[Long, AtomicInteger]()
+    val marker = s"topo-jobs-marker-${System.nanoTime()}"
+    val drained = new AtomicReference[CountDownLatch]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("sql.streaming.queryId") == queryId.get))
+          jobs.computeIfAbsent(p.get.getProperty("streaming.sql.batchId").toLong,
+            _ => new AtomicInteger()).incrementAndGet()
+        if (p.exists(_.getProperty("spark.jobGroup.id") == marker)) drained.get.countDown()
+      }
+    }
+    val sc = spark.sparkContext
+    /** Jobs per batch, once the listener bus has delivered every job start. */
+    def jobsPerBatch(): Map[Long, Int] = {
+      drained.set(new CountDownLatch(1))
+      sc.setJobGroup(marker, "listener bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.get.await(30, TimeUnit.SECONDS))
+      jobs.asScala.map { case (b, n) => b -> n.get }.toMap
+    }
+    (0 until 20).foreach { i =>
+      ShardedLog.putRecord(src, s"v$i",
+        record(s"v$i", if (i % 2 == 0) "USA" else "Chile", i, 1).getBytes("UTF-8"))
+    }
+    sc.addSparkListener(listener)
+    val etl = Topology.startEtlConsumer(spark, src,
+      Map("usa" -> usa, "international" -> intl),
+      errorsDir = errors.toString, checkpointDir = s"$base/ckpt",
+      trigger = Trigger.ProcessingTime(0), maxRecordsPerPoll = 1000)
+    try {
+      queryId.set(etl.id.toString)
+      etl.processAllAvailable()
+      val clean = jobsPerBatch()
+      assert(clean.nonEmpty)
+      assert(clean.values.forall(_ <= 2), s"jobs per batch without dead letters: $clean")
+      val written = Option(errors.list()).toSeq.flatten
+      assert(written.isEmpty, s"a batch without dead letters wrote $written")
+
+      dead.zipWithIndex.foreach { case ((payload, _), i) =>
+        ShardedLog.putRecord(src, s"d$i", payload.getBytes("UTF-8"))
+      }
+      ShardedLog.putRecord(src, "v20", record("v20", "USA", 1, 1).getBytes("UTF-8"))
+      etl.processAllAvailable()
+      val withDead = jobsPerBatch() -- clean.keySet
+      assert(withDead.nonEmpty)
+      assert(withDead.values.forall(_ <= 3), s"jobs per batch with dead letters: $withDead")
+    } finally {
+      etl.stop()
+      sc.removeSparkListener(listener)
+    }
+    val errs = spark.read.json(errors.toString)
+      .select($"payload", $"error").as[(String, String)].collect().toMap
+    assert(errs == dead.toMap)
+    assert(ShardedLog.endOffsets(usa).values.sum + ShardedLog.endOffsets(intl).values.sum == 21L)
   }
 
   test("later micro-batches reuse the compiled ETL code") {

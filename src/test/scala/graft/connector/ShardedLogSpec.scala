@@ -136,12 +136,18 @@ class ShardedLogSpec extends SparkTestBase {
   }
 
   test("Catalyst shardIndexCol matches driver-side shardFor") {
-    val keys = (1 to 200).map(i => s"session-$i")
+    val keys = (1 to 200).map(i => s"session-$i") ++ Seq("", "é", "Zürich-ü",
+      "東京-セッション", "\uD83D\uDE80-rocket", "tab\tnl\n", "x" * 1500,
+      "ß€" * 700)
     val got = keys.toDF("k")
-      .select($"k", ShardedLogWriter.shardIndexCol($"k", 4).as("s"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .select($"k", ShardedLogWriter.shardIndexCol($"k", 4).as("s"),
+        // the md5 → hex → substring → conv chain the native hash replaced
+        shiftright(conv(substring(md5($"k"), 1, 15), 16, 10).cast("long") * 4, 60)
+          .as("hex"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     keys.foreach { k =>
-      assert(got(k) == ShardedLog.shardFor(k, 4).toLong, s"key $k")
+      assert(got(k)._1 == ShardedLog.shardFor(k, 4).toLong, s"key $k")
+      assert(got(k)._1 == got(k)._2, s"key $k")
     }
   }
 
