@@ -57,7 +57,6 @@ case class SortedPairs(left: Expression, right: Expression)
     right.eval(null)
   } match {
     case i: Int => i
-    case l: Long => l.toInt
     case other => throw new IllegalArgumentException(
       s"sorted_pairs cap must be an integer literal, got $other")
   }
@@ -131,7 +130,6 @@ case class SortedTriples(left: Expression, right: Expression)
     right.eval(null)
   } match {
     case i: Int => i
-    case l: Long => l.toInt
     case other => throw new IllegalArgumentException(
       s"sorted_triples cap must be an integer literal, got $other")
   }

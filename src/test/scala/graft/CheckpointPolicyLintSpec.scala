@@ -15,14 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * them, contradicting the documented recovery story (executor-kill
   * chaos is the observable: localCheckpoint blocks are not replayable).
   *
-  * Allowed exceptions: `Checkpoints.scala` (the policy seam itself) and
-  * `BenchProbe.scala` (a dev-only timing probe, never gated or run on a
-  * cluster).
+  * The only allowed exception is `Checkpoints.scala`, the policy seam
+  * itself.
   */
 class CheckpointPolicyLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
-  private val allowed = Set("Checkpoints.scala", "BenchProbe.scala")
+  private val allowed = Set("Checkpoints.scala")
 
   test("no bare .localCheckpoint( outside the policy seam") {
     val offenders = Files.walk(root).iterator().asScala

@@ -125,14 +125,16 @@ class SortedPairsSpec extends SparkTestBase {
 
   test("non-long element types fail at analysis, not as silent garbage") {
     // toLongArray over an UnsafeArrayData of 4-byte ints would read
-    // 8-byte slots — ExpectsInputTypes must reject it before execution
+    // 8-byte slots — ExpectsInputTypes must reject it before execution.
+    // The cap is pinned to INT the same way: a BIGINT cap is not cast.
     SortedPairs.register(spark)
-    for (fn <- Seq("sorted_pairs", "sorted_triples")) {
+    for (fn <- Seq("sorted_pairs", "sorted_triples");
+         args <- Seq("array(1, 2, 3)", "array(1L, 2L, 3L), CAST(2 AS BIGINT)")) {
       val e = intercept[org.apache.spark.sql.AnalysisException] {
-        spark.sql(s"SELECT $fn(array(1, 2, 3))").collect()
+        spark.sql(s"SELECT $fn($args)").collect()
       }
       assert(e.getMessage.toLowerCase.contains("type"),
-        s"$fn: expected a type-check analysis error, got: ${e.getMessage}")
+        s"$fn($args): expected a type-check analysis error, got: ${e.getMessage}")
     }
   }
 
