@@ -1,41 +1,15 @@
 package graft
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER mirrors Verify: the r11 process-boundary work
-    // benches the full surface under local-cluster (executors in their
-    // own JVMs) to quantify the multi-JVM serialization/fetch overhead
-    // vs the canonical single-JVM numbers. Non-default masters NEVER
-    // write the canonical snapshot files (guard below).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The default codegen class cache holds 100 entries; a 286-query
-      // surface generates thousands of codegen units, so every query's
-      // next run recompiled its whole plan after the cache thrashed —
-      // measured r10: an interleaved 6-query min-of-3 dropped 10.1 →
-      // 4.6 s total from this one setting (dedup_incremental 2.25 →
-      // 0.72 s). On a real cluster each query is its own application
-      // and compiles once; charging query N for queries 1..N-1 evicting
-      // its classes is a single-JVM-marathon artifact, not plan cost.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-    val spark = (if (master.startsWith("local-cluster"))
-      builder0
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions", GraftCluster.moduleOpens)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
-    else builder0)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[...] benches the full surface with
+    // executors in their own JVMs (the r11 process-boundary work) to
+    // quantify multi-JVM serialization/fetch overhead vs the canonical
+    // single-JVM numbers. Non-default masters NEVER write the canonical
+    // snapshot files (guard below).
+    val spark = GraftSession()
+    val master = spark.sparkContext.master
     // The between-query unpersist below drops locally-checkpointed
     // blocks ON PURPOSE (the query is finished; nothing will recompute
     // them), but RDD.unpersist logs a per-RDD lineage WARN for each —
@@ -177,7 +151,7 @@ object Bench {
       // Compare the RESOLVED master, not env-var presence, so
       // SPARK_GRAFT_MASTER=local[N] (protocol-identical to the default)
       // still writes the snapshot (r12 advice).
-      val canonicalMaster = master == s"local[$cpus]"
+      val canonicalMaster = master == s"local[${GraftSession.cpus}]"
       if (only.isEmpty && canonicalSf && canonicalMaster) {
         // ATOMIC replace (temp + move): the driver's round artifact
         // parses these files while/after the bench runs — a plain

@@ -1,66 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the master URL; the driving case is the
-    // r11 process-boundary gate: `local-cluster[4,8,8192]` runs executors
-    // as SEPARATE JVMs (standalone worker-launched), exercising task
-    // serialization, closure capture and remote shuffle/block fetch that
-    // the single-JVM local[n] regime structurally cannot (the r10 x100
-    // stress found a Kryo-spill defect class ten rounds in for exactly
-    // this reason). Executors are fresh JVMs, so they need the graft
-    // classes on their classpath and Spark's canonical module opens.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores ts as TIMESTAMP(NANOS); Spark only reads it
-      // as a long (nanos since epoch) — Tables.events converts to micros.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write µs timestamps (not INT96) so result parquet dtypes match the
-      // oracle's arrow schema
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // see Bench: the default 100-entry codegen cache thrashes across a
-      // 286-query run; harmless for correctness, big for gate wall-clock
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // depth safety (r15 finding): a big driver heap may never GC, so
-      // ContextCleaner never releases finished queries' shuffle files and
-      // a ×1000 Verify run fills the disk to death. Gate-scale cost is a
-      // few no-op GCs across a 4-minute run; a -D still overrides.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.props.getOrElse("spark.cleaner.periodicGC.interval", "60s"))
-      // SPARK_GRAFT_ANSI: the r12 overflow sweep knob. Spark 4's DEFAULT
-      // is ansi=true (loud casts), and the canonical gate keeps that
-      // default — the conf is only set when the env var is present.
-      // SPARK_GRAFT_ANSI=false runs the PERMISSIVE direction (value
-      // divergence would surface as oracle hash mismatches). r12 ran
-      // both directions: 286/286 hash-identical each way. CAVEAT found
-      // while sweeping: `div` (IntegralDivide) on DECIMAL operands
-      // returns LONG and WRAPS SILENTLY under BOTH ANSI settings in
-      // 4.1.2 — a clean ANSI run does NOT certify div-based fixed-point
-      // emissions; their safety rests on the documented bound arguments
-      // (README r12 table) and the periodic ×100 oracle replays (which
-      // is how the r11 covariance-drift wrap was actually caught).
-    val builderA = sys.env.get("SPARK_GRAFT_ANSI")
-      .fold(builder0)(v => builder0.config("spark.sql.ansi.enabled", v))
-    val spark = (if (master.startsWith("local-cluster"))
-      builderA
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          GraftCluster.moduleOpens)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
-    else builderA)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[4,8,8192] is the r11
+    // process-boundary gate: executors run as SEPARATE JVMs, exercising
+    // task serialization, closure capture and remote shuffle/block fetch
+    // that the single-JVM local[n] regime structurally cannot (the r10
+    // x100 stress found a Kryo-spill defect class ten rounds in for
+    // exactly this reason). GraftSession wires the executors.
+    //
+    // SPARK_GRAFT_ANSI: the r12 overflow sweep knob. Spark 4's DEFAULT is
+    // ansi=true (loud casts), and the canonical gate keeps that default —
+    // the conf is only set when the env var is present.
+    // SPARK_GRAFT_ANSI=false runs the PERMISSIVE direction (value
+    // divergence would surface as oracle hash mismatches). r12 ran both
+    // directions: 286/286 hash-identical each way. CAVEAT found while
+    // sweeping: `div` (IntegralDivide) on DECIMAL operands returns LONG
+    // and WRAPS SILENTLY under BOTH ANSI settings in 4.1.2 — a clean ANSI
+    // run does NOT certify div-based fixed-point emissions; their safety
+    // rests on the documented bound arguments (README r12 table) and the
+    // periodic ×100 oracle replays (which is how the r11 covariance-drift
+    // wrap was actually caught).
+    val spark = GraftSession(Seq(
+      // write µs timestamps (not INT96) so result parquet dtypes match
+      // the oracle's arrow schema
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      GraftSession.periodicGC) ++
+      sys.env.get("SPARK_GRAFT_ANSI").map("spark.sql.ansi.enabled" -> _): _*)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset knob (mirrors Bench): SPARK_GRAFT_ONLY=q1,q2 runs and
     // dumps just those queries' results + oracle SQL. The driver never sets

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.connector.shardedlog.{ShardedLog, ShardedLogSource, ShardedLogWriter}
+import graft.GraftSession
 import graft.etl.SessionEtl
 
 /** The reference's full streaming topology (SURVEY.md §2.7), Spark-native:
@@ -191,9 +192,7 @@ object Producer {
 object ConsoleConsumer {
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).map(a => a(0) -> a(1)).toMap
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-console-consumer")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("spark.app.name" -> "graft-console-consumer")
     val q = Topology.readStream(spark, opts("--stream"))
       .selectExpr("shard", "sequence_number", "CAST(data AS STRING) AS data")
       .writeStream.format("console")
@@ -214,9 +213,7 @@ object EtlConsumer {
     val dest = opts("--dest_streams").split(",").map { kv =>
       val Array(k, v) = kv.split("=", 2); k -> v
     }.toMap
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-etl-consumer")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("spark.app.name" -> "graft-etl-consumer")
     val q = Topology.startEtlConsumer(spark, opts("--source_stream"), dest,
       opts.getOrElse("--errors_dir", opts("--source_stream") + "-errors"),
       opts.getOrElse("--checkpoint", opts("--source_stream") + "-ckpt"))

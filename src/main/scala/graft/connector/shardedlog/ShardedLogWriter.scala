@@ -102,8 +102,11 @@ object ShardedLogWriter {
     */
   def write(batch: DataFrame, streamDir: String, keyCol: Column,
       dataCol: Column, orderWithinKey: Seq[Column] = Nil): Unit =
-    writeRouted(batch, lit(streamDir), Map(streamDir -> streamDir), keyCol,
-      dataCol, orderWithinKey)
+    // Every row takes the one route. The route column is a cast, not
+    // `lit(streamDir)`: `routeCol === route` would then compare a literal
+    // with itself, which Spark logs as a trivially true predicate.
+    writeRouted(batch, lit(streamDir).cast("string"),
+      Map(streamDir -> streamDir), keyCol, dataCol, orderWithinKey)
 
   /** Write each row of `batch` into the stream `streams(route)`, where
     * `route` is the row's `routeCol` value, in ONE shuffle: a reduce

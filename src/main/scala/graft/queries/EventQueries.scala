@@ -110,8 +110,11 @@ object EventQueries {
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("purchase_ts"),
         col("value").as("purchase_value"))
-    clicks.join(purchases,
-        clicks("user_id") === purchases("user_id") &&
+    // both sides come from one events relation, so join on the aliased,
+    // qualified columns: `clicks("user_id") === purchases("user_id")`
+    // resolves to one attribute compared with itself
+    clicks.as("c").join(purchases.as("p"),
+        col("c.user_id") === col("p.user_id") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
       .groupBy(col("click_id"))

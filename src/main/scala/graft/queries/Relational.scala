@@ -6,8 +6,9 @@ import graft.Tables
 
 /** Batch relational query surface over the harness star schema.
   *
-  * Each query is paired with ANSI SQL in [[graft.SparkEntry.oracleSql]] that
-  * DuckDB runs on the same parquet files; the driver hash-compares results,
+  * Each query is paired with ANSI SQL in its [[graft.QuerySpec]] (the
+  * registry is [[graft.SparkEntry.specs]]) that DuckDB runs on the same
+  * parquet files; the driver hash-compares results,
   * so determinism rules apply throughout:
   *
   *   - Money arithmetic is done in DECIMAL(18,2) (cast from the stored

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Bounded-scratch K-pass runner for the gram-posting family
   * (`suffix_dup_spans`, `source_overlap_matrix`) at depth scales whose
@@ -35,7 +37,7 @@ import org.apache.spark.sql.functions._
   * Usage: BoundedScratch <sfDir> <suffix|overlap> [outJson]
   * Env: SPARK_GRAFT_PASSES (default: AUTO — derived by [[PassBudget]]
   *      from the corpus leaf mass and scratch headroom, so a ×1000 run
-  *      needs no pass-count arg), SPARK_GRAFT_CPUS (default 32),
+  *      needs no pass-count arg), SPARK_GRAFT_CPUS (default 4),
   *      SPARK_GRAFT_CHECK=1 cross-checks the K-pass result against the
   *      gated one-pass query (use at a scale where one-pass fits).
   */
@@ -59,23 +61,8 @@ object BoundedScratch {
     val mode = args(1)
     val outJson = args.lift(2)
     val forcedPasses = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .appName(s"bounded-scratch-$mode").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // r15 depth finding: a 96 GiB driver heap may never GC across a
-      // multi-pass run, so ContextCleaner never drops finished passes'
-      // shuffle files and the disk fills to death. Default the periodic
-      // GC here (a -D on the command line still overrides).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.props.getOrElse("spark.cleaner.periodicGC.interval", "60s"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      "spark.app.name" -> s"bounded-scratch-$mode", GraftSession.periodicGC)
 
     val shuffleWrite = new AtomicLong(0L)
     val spill = new AtomicLong(0L)
@@ -107,7 +94,7 @@ object BoundedScratch {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("n_chars") >= G)
       .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
-      .repartition(cpus.toInt, col("doc_id"))
+      .repartition(GraftSession.cpus, col("doc_id"))
       .write.mode("overwrite").parquet(s"$scratch/docs")
     val splitSec = (System.nanoTime() - t0) / 1e9
 

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Bounded-scratch K-pass runner for `copurchase_recall_at_k` at depth
   * scales whose one-shot scoring exchange exceeds one box's disk (the
@@ -32,7 +34,7 @@ import org.apache.spark.sql.functions._
   * Env: SPARK_GRAFT_PASSES / SPARK_GRAFT_MODEL_PASSES (default: AUTO —
   *      both derived by [[PassBudget]] from the split's leaf mass and
   *      scratch headroom, so a ×1000 run needs no pass-count args),
-  *      SPARK_GRAFT_CPUS (default 32),
+  *      SPARK_GRAFT_CPUS (default 4),
   *      SPARK_GRAFT_CHECK=1 cross-checks the summed result against the
   *      gated one-pass query (use at a scale where one-pass fits).
   */
@@ -62,23 +64,8 @@ object CopurchasePasses {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outJson = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .appName("copurchase-passes").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // r15 depth finding: a 96 GiB driver heap may never GC across a
-      // multi-pass run, so ContextCleaner never drops finished passes'
-      // shuffle files and the disk fills to death. Default the periodic
-      // GC here (a -D on the command line still overrides).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.props.getOrElse("spark.cleaner.periodicGC.interval", "60s"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      "spark.app.name" -> "copurchase-passes", GraftSession.periodicGC)
 
     val shuffleWrite = new AtomicLong(0L)
     val spill = new AtomicLong(0L)
@@ -96,7 +83,7 @@ object CopurchasePasses {
     def availGb: Double = new java.io.File(scratch).getUsableSpace / 1e9
     def gcRelease(): Unit = { System.gc(); Thread.sleep(3000) }
 
-    val nPart = cpus.toInt
+    val nPart = GraftSession.cpus
 
     // K (scoring) and M (model): forced by the env knobs, else derived
     // from the split's leaf mass × the measured exchange expansions vs

@@ -5,9 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.util.Try
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.{Checkpoints, GraftCluster, Provenance, SparkEntry}
+import graft.{Checkpoints, GraftSession, Provenance, SparkEntry}
 
 /** Executor-loss chaos harness for the iterative query family (r11 judge
   * item 2): under `local-cluster` (executors in their OWN JVMs), kill -9
@@ -88,25 +87,12 @@ object ExecutorChaos {
     val master =
       sys.env.getOrElse("SPARK_GRAFT_CHAOS_MASTER", "local-cluster[3,8,6144]")
 
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-executor-chaos")
-      .config("spark.sql.shuffle.partitions", "24")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions", GraftCluster.moduleOpens)
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "5g"))
-      // chaos runs MUST tolerate task retry storms from the dying
-      // executor; keep Spark's defaults for maxFailures (4) so the
-      // localCheckpoint failure mode is the documented one, not a
-      // tuned-down artifact.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // chaos runs MUST tolerate task retry storms from the dying executor;
+    // keep Spark's defaults for maxFailures (4) so the localCheckpoint
+    // failure mode is the documented one, not a tuned-down artifact.
+    val spark = GraftSession("spark.master" -> master,
+      "spark.app.name" -> "graft-executor-chaos",
+      "spark.sql.shuffle.partitions" -> "24")
 
     // stage-completion counter drives kill timing
     val stagesDone = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dev probe: print one gated query's formatted plan and the FINAL
   * adaptive plan (AQE's post-runtime-stats choice of partition counts,
@@ -18,7 +17,7 @@ import graft.SparkEntry
   * untimed run (ADVICE r13).
   *
   * Usage: ExplainQuery <sfDir> <query>[,query2,...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SKIP_EXEC=1 to print
+  * Env: SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_SKIP_EXEC=1 to print
   * only the static plan (no execution at heavy scales).
   */
 object ExplainQuery {
@@ -27,16 +26,7 @@ object ExplainQuery {
     val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name: static formatted plan =====")

@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{DtypeLint, SparkEntry}
+import graft.{DtypeLint, GraftSession, SparkEntry}
 
 /** Regenerates the checked-in output-schema snapshot
   * (`src/main/resources/graft/expected_schemas.tsv`) that `Verify.main`
@@ -21,14 +19,7 @@ object PinSchemas {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val out = Paths.get("src/main/resources/graft/expected_schemas.tsv")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try Some(s"$name\t${DtypeLint.canonicalSchema(fn(spark, sfDir))}")

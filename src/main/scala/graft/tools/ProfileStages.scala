@@ -6,13 +6,12 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dev-only per-stage profiler: runs queries with a stage listener and
   * flags UNDERPARALLELIZED HOT stages — long wall-clock on ≤4 tasks at
-  * local[32]. That shape is almost always AQE coalescing a small-bytes
+  * local[n]. That shape is almost always AQE coalescing a small-bytes
   * shuffle that feeds a row-explosion (self-join, posting-list join,
   * fan-out scoring): AQE sizes post-shuffle partitions by input bytes
   * and cannot see output fan-out, so the query's heaviest work
@@ -54,22 +53,8 @@ object ProfileStages {
         "link_predict_users", "knn_graph_grams", "dedup_incremental",
         "triangle_count", "source_overlap_matrix", "neighbor_degree_function")
     }
-    val spark = SparkSession.builder()
-      .appName("profile-stages").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      // match Bench: without this the 100-entry codegen cache thrashes
-      // across a full-surface sweep and stage timings measure Janino
-      // recompilation, not plan cost
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // r15 depth finding: a 96 GiB driver heap may never GC across a
-      // ×1000 single-query run, so ContextCleaner never drops finished
-      // stages' shuffle files and the disk fills to death. Default the
-      // periodic GC here (a -D on the command line still overrides).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.props.getOrElse("spark.cleaner.periodicGC.interval", "60s"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      "spark.app.name" -> "profile-stages", GraftSession.periodicGC)
 
     // Leaf classification keys on RAW shuffle-read bytes, not the
     // MB-rounded display value: the defects this sweep hunts are

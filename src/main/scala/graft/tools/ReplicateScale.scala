@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale-stress data synthesizer: writes an N× replica of a
@@ -38,14 +38,8 @@ object ReplicateScale {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-replicate-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("spark.app.name" -> "graft-replicate-scale",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
     // events.ts is timestamp[us] in the shipped testdata, so it reads as a
     // timestamp directly (the nanosAsLong flag only rewrites NANOS columns)

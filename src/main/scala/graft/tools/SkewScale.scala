@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only skew-stress data synthesizer: writes a Zipf-skewed variant of
@@ -46,14 +46,8 @@ object SkewScale {
     val Array(srcDir, outDir) = args
     val pct = sys.env.getOrElse("SPARK_GRAFT_SKEW_PCT", "20").toInt
     require(pct > 0 && pct < 100, s"SPARK_GRAFT_SKEW_PCT=$pct out of range")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-skew-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("spark.app.name" -> "graft-skew-scale",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
     def load(t: String): DataFrame =
       spark.read.parquet(s"$srcDir/$t.parquet")

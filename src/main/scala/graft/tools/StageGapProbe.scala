@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Timeline probe for ONE query: logs every job/stage submit/complete
   * offset (ms from the action's start) so the dead gaps — driver work
@@ -12,19 +11,10 @@ import org.apache.spark.sql.SparkSession
 object StageGapProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
     val name = sys.env.getOrElse("SPARK_GRAFT_ONLY",
       sys.error("set SPARK_GRAFT_ONLY=<one query>"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }

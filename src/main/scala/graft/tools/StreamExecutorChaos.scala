@@ -6,11 +6,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import scala.util.Try
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Provenance
+import graft.{GraftSession, Provenance}
 import graft.app.Topology
 import graft.connector.shardedlog.{ShardedLog, ShardedLogSource}
 import graft.streaming.EtlStream
@@ -120,20 +119,9 @@ object StreamExecutorChaos {
     val killAtSec = sys.env.getOrElse("SPARK_GRAFT_CHAOS_KILL_AT_SEC", "12,28")
       .split(",").map(_.trim.toInt).toSeq
 
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-stream-executor-chaos")
-      .config("spark.sql.shuffle.partitions", "24")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions", graft.GraftCluster.moduleOpens)
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "5g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("spark.master" -> master,
+      "spark.app.name" -> "graft-stream-executor-chaos",
+      "spark.sql.shuffle.partitions" -> "24")
 
     val nExec = master match {
       case s if s.startsWith("local-cluster[") =>

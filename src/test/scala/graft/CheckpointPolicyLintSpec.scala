@@ -16,27 +16,42 @@ import org.scalatest.funsuite.AnyFunSuite
   * chaos is the observable: localCheckpoint blocks are not replayable).
   *
   * The only allowed exception is `Checkpoints.scala`, the policy seam
-  * itself.
+  * itself. The same walker also holds the session seam: only
+  * `GraftSession.scala` may call `SparkSession.builder`.
   */
 class CheckpointPolicyLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
   private val allowed = Set("Checkpoints.scala")
 
-  test("no bare .localCheckpoint( outside the policy seam") {
-    val offenders = Files.walk(root).iterator().asScala
+  /** Non-comment lines under `root` containing `needle`, outside `allow`. */
+  private def offenders(needle: String, allow: Set[String]): Seq[String] =
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => allowed(p.getFileName.toString))
+      .filterNot(p => allow(p.getFileName.toString))
       .flatMap { p: Path =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(".localCheckpoint(") &&
+          case (line, i) if line.contains(needle) &&
             !line.trim.startsWith("//") && !line.trim.startsWith("*") =>
             s"$p:${i + 1}: ${line.trim.take(80)}"
         }
       }.toSeq
-    assert(offenders.isEmpty,
+
+  test("no bare .localCheckpoint( outside the policy seam") {
+    val found = offenders(".localCheckpoint(", allowed)
+    assert(found.isEmpty,
       "bare .localCheckpoint( bypasses the reliableCheckpoint flag — " +
         "use Checkpoints.stableCheckpoint():\n  " +
-        offenders.mkString("\n  "))
+        found.mkString("\n  "))
+  }
+
+  // The session seam: every main builds its session through GraftSession,
+  // so a tool cannot drift from the gate's config (timezone, nanos
+  // timestamps, codegen cache, cluster wiring) by copying a builder.
+  test("no SparkSession.builder outside GraftSession") {
+    val found = offenders("SparkSession.builder", Set("GraftSession.scala"))
+    assert(found.isEmpty,
+      "build the session with graft.GraftSession(conf pairs):\n  " +
+        found.mkString("\n  "))
   }
 }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession (local[4],
-  * small shuffle fan-out) so the test run doesn't pay session startup per
-  * suite.
+/** Shared session for all suites — one JVM-wide SparkSession from
+  * [[GraftSession]] (the gate's config), pinned to local[4] with 4 shuffle
+  * partitions, so the test run doesn't pay session startup per suite.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
@@ -14,16 +14,8 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(
+    "spark.master" -> "local[4]",
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "4")
 }

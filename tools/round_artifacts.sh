@@ -63,7 +63,7 @@ MRG=/tmp/sf01_mrg
   python3 tools/rowgroup_rewrite.py "$SF01" "$MRG" 32
   touch "$MRG/.rewrite_done"
 }
-SPARK_GRAFT_ONLY=ALL SPARK_GRAFT_SF_DIR="$MRG" \
+SPARK_GRAFT_ONLY=ALL SPARK_GRAFT_SF_DIR="$MRG" SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_PROFILE_OUT="profile_sweep_r${ROUND}.json" \
   "$JAVA" -Dspark.sql.files.maxPartitionBytes=524288 \
     -Dspark.sql.files.openCostInBytes=65536 \
