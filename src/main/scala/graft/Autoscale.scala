@@ -51,9 +51,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * force either way.
   *
   * Every lever decision is RECORDED (and the first occurrence of each
-  * distinct decision printed as one structured `[autoscale]` line) so a
-  * depth-run artifact shows WHICH shape ran without re-deriving it from
-  * wall times (r16 punch item 5): see [[record]]/[[decisionsJson]].
+  * distinct decision logged at INFO as one structured `[autoscale]` line)
+  * so a depth-run artifact shows WHICH shape ran without re-deriving it
+  * from wall times (r16 punch item 5): see [[record]]/[[decisionsJson]].
   */
 object Autoscale {
 
@@ -114,20 +114,22 @@ object Autoscale {
 
   private val decisionLog =
     new java.util.concurrent.ConcurrentLinkedQueue[Decision]
-  private val printedKeys =
+  private val loggedKeys =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Record a lever decision; the FIRST occurrence of each distinct
-    * (op, lever, chosen, mode) prints one `[autoscale]` line (iterative
-    * loops re-decide per round/checkpoint — thousands of identical lines
-    * would bury the signal the line exists to carry).
+    * (op, lever, chosen, mode) logs one `[autoscale]` line at INFO
+    * (iterative loops re-decide per round/checkpoint — thousands of
+    * identical lines would bury the signal the line exists to carry).
+    * [[decisions]] is the full in-memory record.
     */
   def record(op: String, lever: String, leafBytes: BigInt,
       thresholdBytes: Long, chosen: String, mode: String): Unit = {
     val d = Decision(op, lever, leafBytes, thresholdBytes, chosen, mode)
     decisionLog.add(d)
-    if (printedKeys.add(s"$op|$lever|$chosen|$mode"))
-      println("[autoscale] " + d.json)
+    if (loggedKeys.add(s"$op|$lever|$chosen|$mode"))
+      log.info("[autoscale] {}", d.json)
   }
 
   /** All decisions recorded in this JVM, in order. */
@@ -148,7 +150,7 @@ object Autoscale {
 
   def clearDecisions(): Unit = {
     decisionLog.clear()
-    printedKeys.clear()
+    loggedKeys.clear()
   }
 
   /** Operator label for a decision: the nearest `graft.*` frame on the

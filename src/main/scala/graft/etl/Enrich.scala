@@ -4,11 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The reference's four per-record derived attributes (SURVEY.md §2.2
-  * P1–P4), as pure `Column` functions over built-in expressions (no UDFs),
-  * so they run inside the ETL's one projection regardless of scale. The
+  * P1–P4), as pure `Column` functions over built-in expressions (no UDFs).
+  * The streaming ETL computes P2–P4 natively inside
+  * [[graft.functions.SessionDecode]] with the same semantics; these column
+  * forms serve the `EtlParity` gate queries, which apply them to
+  * browse-history-shaped arrays where a DuckDB oracle exists. Their
   * higher-order array functions (`aggregate`, `filter`) are not compiled:
   * on Spark 4.1.2 `ArrayAggregate` and `ArrayFilter` implement
-  * `CodegenFallback`, so the generated projection calls their interpreted
+  * `CodegenFallback`, so a generated projection calls their interpreted
   * `eval` per row.
   *
   * Reference semantics reproduced exactly:
@@ -27,9 +30,9 @@ object Enrich {
     * ints pass directly; numeric floats truncate toward zero (Python
     * `int(2.5)` == 2, `int(-2.5)` == -2 — double→long cast truncation, NOT
     * floor); anything else (null / missing / non-numeric) is null — the
-    * validity predicate in [[SessionEtl]] routes such records to the
-    * dead-letter channel, mirroring the reference's raise-log-skip
-    * (consumer.py:178-185).
+    * ETL's validity rule ([[graft.functions.SessionDecoder]], which applies
+    * this same cast) routes such records to the dead-letter channel,
+    * mirroring the reference's raise-log-skip (consumer.py:178-185).
     *
     * Known divergence, by construction: `quantity` parses as StringType
     * (see [[SessionSchemas.browseItem]]), so a JSON number `2.5` and a JSON
@@ -70,12 +73,4 @@ object Enrich {
     */
   def isoTimestamp(ts: Column): Column =
     date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-
-  /** All four derived columns over a parsed session DataFrame. */
-  def withDerived(clock: Column = current_timestamp())(
-      browseHistory: Column): Seq[(String, Column)] = Seq(
-    "processing_timestamp" -> processingTimestamp(clock),
-    "overall_product_quantity" -> overallProductQuantity(browseHistory),
-    "overall_in_shopping_cart" -> overallInShoppingCart(browseHistory),
-    "total_different_products" -> totalDifferentProducts(browseHistory))
 }

@@ -1,11 +1,11 @@
 package graft.etl
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
+
+import graft.functions.{SessionDecode, WithoutClosingBrace}
 
 /** Outputs of the ETL transform: the enriched+routed stream and the
   * dead-letter channel (reference: log-and-skip, consumer.py:178-185;
@@ -22,101 +22,23 @@ final case class EtlOutputs(enriched: DataFrame, deadLetter: DataFrame)
   * projections/filters — no state, no shuffle), so the same code path backs
   * unit tests, the golden E2E, and the production streaming topology. At
   * scale it is one map stage whose parallelism is the source's partition
-  * count (shards). It is not one fused loop of generated code: `from_json`
-  * builds an `InputStreamReader`-based Jackson parser per record
-  * (`CreateJacksonParser.utf8String`), a numeric `quantity` token is
-  * copied through a new `JsonGenerator` per value because the schema types
-  * it as a string, and the array functions of [[Enrich]] and [[isValid]]
-  * (`aggregate`, `filter`, `forall`) are `CodegenFallback` expressions,
-  * evaluated by the interpreter from inside the generated projection.
+  * count (shards). Decode, validation, P2–P4 and the output record are one
+  * native expression, [[graft.functions.SessionDecode]]: one Jackson token
+  * pass over each record's UTF-8 bytes, compiled into the stage's
+  * generated code (its semantics, and the `from_json` plan it replaced,
+  * are documented on [[graft.functions.SessionDecoder]]). P1, the route and
+  * the channel split are built-in expressions over its struct.
   */
 object SessionEtl {
 
-  /** Schema used for parsing: session schema + corrupt-record channel. */
-  private val parseSchema: StructType =
-    SessionSchemas.session.add(SessionSchemas.corruptColumn, StringType)
-
-  /** S4: bytes/string JSON → parsed struct, PERMISSIVE with corrupt capture.
-    * Input must have a `data` column (BinaryType or StringType); all other
-    * input columns (shard, sequence_number, …) pass through untouched.
-    */
-  def decode(raw: DataFrame, dataCol: String = "data"): DataFrame = {
-    val asString = raw.schema(dataCol).dataType match {
-      case StringType => col(dataCol)
-      case _          => col(dataCol).cast("string")
-    }
-    raw
-      .withColumn("raw_json", asString)
-      .withColumn("parsed",
-        from_json(col("raw_json"), parseSchema,
-          Map("mode" -> "PERMISSIVE",
-              "columnNameOfCorruptRecord" -> SessionSchemas.corruptColumn)))
-  }
-
-  /** Validity per reference semantics (§1.4): a record is dead-lettered iff
-    * processing it would raise in the reference consumer —
-    *  - unparseable JSON (json.loads raises, consumer.py:118)
-    *  - missing session_id (PutRecord PartitionKey lookup, consumer.py:170)
-    *  - missing country (routing lookup, consumer.py:161)
-    *  - missing browse_history (iteration, consumer.py:135)
-    *  - any item whose quantity is not numeric (int(...) raises,
-    *    consumer.py:137; floats truncate — see [[Enrich.qty]] for the
-    *    lenient string-vs-number divergence note)
-    * A null `in_shopping_cart` is VALID and simply not counted (Python
-    * `None is True` is False, it does not raise — consumer.py:142).
-    *
-    * Note the corrupt-record column is deliberately NOT part of validity:
-    * Spark's PERMISSIVE parse also flags a field-level type mismatch (e.g. a
-    * string where the schema says boolean) as "corrupt", but the reference's
-    * `json.loads` succeeds on such records and processes them fine — so a
-    * record counts as corrupt only when nothing required parsed at all.
-    */
-  def isValid(parsed: Column): Column = {
-    val bh = parsed.getField("browse_history")
-    parsed.isNotNull &&
-      parsed.getField("session_id").isNotNull &&
-      parsed.getField("country").isNotNull &&
-      bh.isNotNull &&
-      forall(bh, x => Enrich.qty(x).isNotNull)
-  }
-
-  /** S5: output wire format. The reference mutates the decoded dict in place
-    * and re-serializes the WHOLE record (consumer.py:167-169), so unknown
-    * input fields must pass through. We reproduce that with JSON-string
-    * surgery on the original payload — append the four derived fields before
-    * the closing brace — which preserves every unmodeled field byte-for-byte
-    * (SURVEY.md §7.4(1)). `isoTs` is the formatted processing timestamp.
-    */
-  private def outputJson(rawJson: Column, isoTs: Column, opq: Column,
-      oisc: Column, tdp: Column): Column =
-    concat(
-      withoutClosingBrace(rawJson),
-      lit(", \"processing_timestamp\": \""), isoTs, lit("\""),
-      lit(", \"overall_product_quantity\": "), opq.cast("string"),
-      lit(", \"overall_in_shopping_cart\": "), oisc.cast("string"),
-      lit(", \"total_different_products\": "), tdp.cast("string"),
-      lit("}"))
-
-  /** Line terminators before which Java's `$` also matches at the end of
-    * the input.
-    */
-  private val FinalTerminators = Seq("\n", "\r\n", "\r", "\u0085", "\u2028", "\u2029")
-
-  /** `regexp_replace(rtrim(json), "\\}$", "")` without the regex: drops a
-    * `}` that ends the right-trimmed payload or precedes one final line
-    * terminator, which stays. Built from functions that are compiled into
-    * the projection, and cut by byte offsets (`octet_length`, binary
-    * `substr`): character offsets would walk the UTF-8 payload twice.
+  /** `regexp_replace(rtrim(json), "\\}$", "")`: drops a `}` that ends the
+    * right-trimmed payload or precedes one final line terminator, which
+    * stays. The byte cut [[graft.functions.SessionDecode]] makes before it
+    * appends the derived fields.
     */
   private[etl] def withoutClosingBrace(json: Column): Column = {
-    val trimmed = rtrim(json)
-    val bytes = octet_length(trimmed)
-    ("" +: FinalTerminators).foldRight(trimmed) { (t, rest) =>
-      val suffix = "}" + t
-      val keep = trimmed.cast("binary")
-        .substr(lit(1), bytes - suffix.getBytes(UTF_8).length).cast("string")
-      when(trimmed.endsWith(suffix), concat(keep, lit(t))).otherwise(rest)
-    }
+    WithoutClosingBrace.register(SparkSession.active)
+    call_function("without_closing_brace", json)
   }
 
   /** Columns only a valid row carries: every parsed session field, the
@@ -134,56 +56,44 @@ object SessionEtl {
   private val sinkColumns: Seq[String] =
     Seq("session_id", "route", "data", "payload", "error")
 
-  /** The whole consumer transform as ONE projection over the decoded input:
+  /** The whole consumer transform as ONE projection over the input:
     * pass-through input columns, then the [[enrichedColumns]] (set on a
     * valid row only), then `payload` (the raw JSON) and `error` (the
     * dead-letter class), both set on an invalid row only. `clock` is
     * injectable for deterministic tests (default: evaluation-time
     * `current_timestamp()`).
     */
-  private def tag(raw: DataFrame, dataCol: String = "data",
-      clock: Column = current_timestamp()): DataFrame = {
-    val passThrough = raw.columns.filterNot(_ == dataCol).map(col).toSeq
-    val parsed = col("parsed")
-    val error =
-      when(isValid(parsed), lit(null).cast(StringType))
-        .when(parsed.isNull ||
-             (parsed.getField(SessionSchemas.corruptColumn).isNotNull &&
-              parsed.getField("session_id").isNull &&
-              parsed.getField("country").isNull &&
-              parsed.getField("browse_history").isNull),
-             lit("corrupt_json"))
-        .when(parsed.getField("session_id").isNull, lit("missing_session_id"))
-        .when(parsed.getField("country").isNull, lit("missing_country"))
-        .when(parsed.getField("browse_history").isNull, lit("missing_browse_history"))
-        .otherwise(lit("bad_quantity"))
+  private def tag(raw: DataFrame, dataCol: String, clock: Column): DataFrame = {
+    val passThrough = raw.columns.filterNot(_ == dataCol).toSeq
+    val rawJson = raw.schema(dataCol).dataType match {
+      case StringType => col(dataCol)
+      case _          => col(dataCol).cast("string")
+    }
+    SessionDecode.register(raw.sparkSession)
+    // `clock` formatted once: a timestamp literal (a micro-batch's
+    // current_timestamp()) folds to a string literal, which generated
+    // code takes by reference, so the next batch reuses the compiled
+    // projection instead of compiling one with its own clock inlined
+    val decoded = call_function("session_decode", rawJson,
+      Enrich.isoTimestamp(clock))
+    val d = col("__decoded")
+    val error = d.getField("error")
     // enrichment is evaluated on valid rows only: the reference never
     // enriches a record it dead-letters
-    def ifValid(c: Column): Column = when(col("error").isNull, c)
-
-    val bh = parsed.getField("browse_history")
-    val derived = decode(raw, dataCol)
-      .withColumn("error", error)
-      .withColumn("processing_timestamp", ifValid(Enrich.processingTimestamp(clock)))
-      .withColumn("overall_product_quantity", ifValid(Enrich.overallProductQuantity(bh)))
-      .withColumn("overall_in_shopping_cart", ifValid(Enrich.overallInShoppingCart(bh)))
-      .withColumn("total_different_products", ifValid(Enrich.totalDifferentProducts(bh)))
-      .withColumn("route", ifValid(Route.route(parsed.getField("country"))))
-    val sessionFields = SessionSchemas.session.fieldNames.toSeq.map(f =>
-      ifValid(parsed.getField(f)).as(f))
-    derived.select(passThrough ++ sessionFields ++ Seq(
-      col("processing_timestamp"), col("overall_product_quantity"),
-      col("overall_in_shopping_cart"), col("total_different_products"),
-      col("route"),
-      // `clock` formatted once: a timestamp literal (a micro-batch's
-      // current_timestamp()) folds to a string literal, which generated
-      // code takes by reference, so the next batch reuses the compiled
-      // projection instead of compiling one with its own clock inlined
-      ifValid(outputJson(col("raw_json"), Enrich.isoTimestamp(clock),
-        col("overall_product_quantity"), col("overall_in_shopping_cart"),
-        col("total_different_products"))).as("data"),
-      when(col("error").isNotNull, col("raw_json")).as("payload"),
-      col("error")): _*)
+    def ifValid(c: Column): Column = when(error.isNull, c)
+    def field(f: String): Column = ifValid(d.getField(f)).as(f)
+    // two selects: the struct is computed once per row, the second only
+    // reads its fields (CollapseProject keeps a non-cheap producer that is
+    // referenced more than once)
+    raw.select(passThrough.map(col) ++
+        Seq(rawJson.as("__raw"), decoded.as("__decoded")): _*)
+      .select(passThrough.map(col) ++
+        SessionSchemas.session.fieldNames.toSeq.map(field) ++
+        Seq(ifValid(Enrich.processingTimestamp(clock)).as("processing_timestamp")) ++
+        Seq("overall_product_quantity", "overall_in_shopping_cart",
+          "total_different_products").map(field) ++
+        Seq(ifValid(Route.route(d.getField("country"))).as("route"), field("data"),
+          when(error.isNotNull, col("__raw")).as("payload"), error.as("error")): _*)
   }
 
   /** True on the invalid rows of a [[tag]]ged frame. */
@@ -219,8 +129,9 @@ object SessionEtl {
     */
   def sinkProjection(batch: DataFrame, dataCol: String = "data"): DataFrame = {
     val passThrough = batch.columns.filterNot(_ == dataCol).toSeq
-    tag(batch, dataCol).select((passThrough ++ sinkColumns).map(c =>
-      if (c == "data") col(c).cast("binary").as(c) else col(c)): _*)
+    tag(batch, dataCol, current_timestamp())
+      .select((passThrough ++ sinkColumns).map(c =>
+        if (c == "data") col(c).cast("binary").as(c) else col(c)): _*)
   }
 
   /** Runs a `foreachBatch` body over the batch's [[sinkProjection]],

@@ -2,7 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.types._
 
-/** Parse-time schemas for the reference's `user_session` payload.
+/** Schemas of the reference's `user_session` payload: the session fields
+  * [[graft.functions.SessionDecode]] emits.
   *
   * Reference: /root/reference README.md:279-298 (canonical record),
   * Solution.ipynb:497 (quantity "arrives as a string due to the decoding
@@ -11,11 +12,11 @@ import org.apache.spark.sql.types._
   */
 object SessionSchemas {
 
-  /** One entry of `browse_history`. `quantity` is parsed as StringType so a
-    * JSON int OR string both survive parsing (Spark's JSON reader renders a
-    * numeric token as its string form when the schema says string); the
-    * cast-to-long happens in [[Enrich]], mirroring the reference's `int(...)`
-    * coercion (consumer.py:137-139).
+  /** One entry of `browse_history`. `quantity` is a StringType so a JSON
+    * int OR string both survive parsing (a numeric token reads as its
+    * string form when the schema says string); the cast-to-long
+    * ([[Enrich.qty]]) mirrors the reference's `int(...)` coercion
+    * (consumer.py:137-139).
     */
   val browseItem: StructType = StructType(Seq(
     StructField("product_code", StringType),
@@ -30,7 +31,4 @@ object SessionSchemas {
     StructField("country", StringType),
     StructField("credit_limit", LongType),
     StructField("browse_history", ArrayType(browseItem))))
-
-  /** Column name used for the PERMISSIVE-mode corrupt record channel. */
-  val corruptColumn = "_corrupt_record"
 }

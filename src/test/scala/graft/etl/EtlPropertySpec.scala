@@ -11,28 +11,7 @@ import graft.SparkTestBase
   */
 class EtlPropertySpec extends SparkTestBase {
   import spark.implicits._
-
-  private case class Item(code: String, quantity: Int, inCart: Option[Boolean])
-
-  private val itemGen: Gen[Item] = for {
-    code <- Gen.alphaNumStr.map("P" + _.take(6))
-    q <- Gen.chooseNum(0, 50)
-    cart <- Gen.option(Gen.oneOf(true, false))
-  } yield Item(code, q, cart)
-
-  private val sessionGen: Gen[(String, String, List[Item])] = for {
-    sid <- Gen.uuid.map(_.toString.take(8))
-    country <- Gen.oneOf("USA", "Colombia", "usa", "Germany", "")
-    items <- Gen.listOfN(5, itemGen).map(_.take(5))
-  } yield (sid, country, items)
-
-  private def toJson(sid: String, country: String, items: List[Item]): String = {
-    val bh = items.map { i =>
-      val cart = i.inCart.map(_.toString).getOrElse("null")
-      s"""{"product_code":"${i.code}","quantity":${i.quantity},"in_shopping_cart":$cart}"""
-    }.mkString("[", ",", "]")
-    s"""{"session_id":"$sid","country":"$country","browse_history":$bh}"""
-  }
+  import EtlPropertySpec._
 
   test("conservation + sum invariants over generated sessions") {
     for (seed <- 1L to 5L) {
@@ -62,5 +41,30 @@ class EtlPropertySpec extends SparkTestBase {
         }
       }
     }
+  }
+}
+
+/** The session generators, shared with [[SessionDecodeDifferentialSpec]]. */
+object EtlPropertySpec {
+  final case class Item(code: String, quantity: Int, inCart: Option[Boolean])
+
+  val itemGen: Gen[Item] = for {
+    code <- Gen.alphaNumStr.map("P" + _.take(6))
+    q <- Gen.chooseNum(0, 50)
+    cart <- Gen.option(Gen.oneOf(true, false))
+  } yield Item(code, q, cart)
+
+  val sessionGen: Gen[(String, String, List[Item])] = for {
+    sid <- Gen.uuid.map(_.toString.take(8))
+    country <- Gen.oneOf("USA", "Colombia", "usa", "Germany", "")
+    items <- Gen.listOfN(5, itemGen).map(_.take(5))
+  } yield (sid, country, items)
+
+  def toJson(sid: String, country: String, items: List[Item]): String = {
+    val bh = items.map { i =>
+      val cart = i.inCart.map(_.toString).getOrElse("null")
+      s"""{"product_code":"${i.code}","quantity":${i.quantity},"in_shopping_cart":$cart}"""
+    }.mkString("[", ",", "]")
+    s"""{"session_id":"$sid","country":"$country","browse_history":$bh}"""
   }
 }
