@@ -67,8 +67,7 @@ object AnalyticsSixth {
       .repartition(nPart, col("c")).stableCheckpoint()
     val test = copurchaseSplit(spark, sfDir, 1).stableCheckpoint()
     val basket = copurchaseCappedBasket(train, nPart)
-    val pairs = copurchaseItemModel(
-      basket.toDF("c", "p"), basket.toDF("c", "q"), nPart)
+    val pairs = copurchaseItemModel(basket, nPart)
     val evalUsers = train.select(col("c")).distinct()
       .join(test.select(col("c")).distinct(), "c")
       .stableCheckpoint()
@@ -78,18 +77,10 @@ object AnalyticsSixth {
           .as("recall_at_10"))
   }
 
-  // The model/evaluation builders below are the SINGLE definition of the
-  // co-purchase recommender's semantics, shared with the bounded-scratch
-  // K-pass depth runner ([[graft.tools.CopurchasePasses]]) so the two can
-  // never drift — the runner's ×100 cross-check against this query stays
-  // regenerable from one code path (the r5 "same edge set" factoring
-  // pattern). Each builder is plan-verbatim what the gated query inlined
-  // through r15; extracting them changes no plan.
-
   /** (c, p) distinct purchase pairs for the given order-key parity —
     * even orders train the model, odd orders are the held-out test.
     */
-  private[graft] def copurchaseSplit(spark: SparkSession, sfDir: String,
+  private def copurchaseSplit(spark: SparkSession, sfDir: String,
       parity: Int): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -105,7 +96,7 @@ object AnalyticsSixth {
     * keyed row_number that plans as WindowGroupLimit) — the lever that
     * bounds pair generation at Σ_c min(deg_c, 50)², linear in customers.
     */
-  private[graft] def copurchaseCappedBasket(train: DataFrame,
+  private def copurchaseCappedBasket(train: DataFrame,
       nPart: Int): DataFrame =
     train.repartition(nPart, col("c"))
       .withColumn("brn", row_number().over(
@@ -114,19 +105,18 @@ object AnalyticsSixth {
       .drop("brn")
 
   /** Top-25-per-part item-item co-purchase weights from a (c, p) basket
-    * joined against a (c, q) basket (the K-pass runner feeds a
-    * hash-filtered p side; the gated query feeds the same basket twice).
-    * One numbered repartition on p carries BOTH the (p,q) count and the
-    * top-25-per-p window: HashPartitioning(p) satisfies the aggregate's
+    * joined against itself as (c, q). One numbered repartition on p
+    * carries BOTH the (p,q) count and the top-25-per-p window:
+    * HashPartitioning(p) satisfies the aggregate's
     * ClusteredDistribution(p,q) (subset rule) and the window's
     * PARTITION BY p, so the ~6M-row pair mass crosses the wire once
     * instead of twice (groupBy's (p,q) exchange + the window's p
     * exchange) — measured 5.8 → 2.4 s cold on this stage alone.
     */
-  private[graft] def copurchaseItemModel(basketP: DataFrame,
-      basketQ: DataFrame, nPart: Int): DataFrame =
-    basketP
-      .join(basketQ, "c")
+  private def copurchaseItemModel(basket: DataFrame,
+      nPart: Int): DataFrame =
+    basket.toDF("c", "p")
+      .join(basket.toDF("c", "q"), "c")
       .filter(col("p") =!= col("q"))
       .repartition(nPart, col("p"))
       .groupBy(col("p"), col("q")).agg(count(lit(1)).as("w"))
@@ -136,8 +126,7 @@ object AnalyticsSixth {
       .drop("nrn")
 
   /** Score eval customers against the truncated model and count top-10
-    * hits — one row (n_users, n_hit). Per-customer end to end, which is
-    * what makes the K-pass runner's hash-range partials additive.
+    * hits — one row (n_users, n_hit).
     *
     * Scoring is the expensive join of the suite: |train| rows fan out
     * by up to 25 neighbors each. The truncated model (`model`,
@@ -163,7 +152,7 @@ object AnalyticsSixth {
     * of them (subset rule for the (c,q) aggregate and anti join;
     * exact for the window) — measured 3.4 → 2.1 s cold on this stage.
     */
-  private[graft] def copurchaseRecallCounts(train: DataFrame,
+  private def copurchaseRecallCounts(train: DataFrame,
       evalUsers: DataFrame, test: DataFrame, model: DataFrame,
       nPart: Int): DataFrame = {
     // r19 attack, measured WORSE and reverted: moving this anti join

@@ -8,16 +8,19 @@ import graft.etl.{Enrich, Route}
 
 /** Gate coverage for the reference ETL operators (SURVEY.md §2.2, §2.5) over
   * the batch testdata: the driver's DuckDB oracle can't run the streaming
-  * pipeline, so these queries apply the SAME `Enrich`/`Route` column
-  * functions to browse-history-shaped arrays built from `lineitem`, where a
-  * plain-SQL oracle exists. P1 (processing_timestamp) is nondeterministic and
-  * stays unit-test-only (injected clock).
+  * pipeline, so these queries apply `Enrich`'s column forms and `Route` to
+  * browse-history-shaped arrays built from `lineitem`, where a plain-SQL
+  * oracle exists. The streaming ETL computes P2–P4 natively in
+  * [[graft.functions.SessionDecode]] instead; `SessionDecodeDifferentialSpec`
+  * ties those column forms to the decoder byte for byte. P1
+  * (processing_timestamp) is nondeterministic and stays unit-test-only
+  * (injected clock).
   */
 object EtlParity {
 
   /** P2+P3+P4+P5 in one shot: per-order "sessions" (collect_list of structs
-    * ≙ browse_history), the three array-derived attributes via the exact
-    * production [[Enrich]] expressions, and the routing predicate on the
+    * ≙ browse_history), the three array-derived attributes via [[Enrich]]'s
+    * column forms, and the routing predicate on the
     * order status. Shuffle count: one (groupBy l_orderkey); the orders join
     * is broadcast at these sizes and co-keyed at scale.
     */

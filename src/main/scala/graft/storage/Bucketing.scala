@@ -20,8 +20,8 @@ object Bucketing {
     * driver GC, > 55 GB at 1.1 B edges). A bucketed write gives the next
     * round a REPORTED HashPartitioning(key, nBuckets) at the price of a
     * local per-task bucket sort (no exchange), and the PREVIOUS round's
-    * table can be dropped deterministically — bounded scratch, the
-    * `BoundedScratch` property, without splitting the loop's lineage.
+    * table can be dropped deterministically — scratch stays bounded by
+    * about two rounds' tables, without splitting the loop's lineage.
     *
     * UNSET (the default) is AUTO: the operator enables the bucketed
     * shape when its leaf input scan crosses [[graft.Autoscale]]'s
