@@ -89,11 +89,12 @@ object Verify {
         // globs the part files, so a multi-file dump is equivalent —
         // and the heavy x10/x100 dumps keep full parallelism.
         df.write.mode("overwrite").parquet(s"$outDir/$name")
-        // per-query wall time on stderr: at non-gate scales (x10/x100
-        // stress, local-cluster demos) the dump IS the timing source, and
-        // external dir-mtime reconstruction kept being the workaround
-        System.err.println(
-          f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1f s)")
+        // per-query wall time on stdout (progress, not an error: sbt's
+        // forked run shows stderr lines as `[error]`): at non-gate scales
+        // (x10/x100 stress, local-cluster demos) the dump IS the timing
+        // source, and external dir-mtime reconstruction kept being the
+        // workaround
+        println(f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1f s)")
       } catch { case e: Throwable =>
         failedJson += name -> String.valueOf(e.getMessage)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

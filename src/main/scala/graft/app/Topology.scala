@@ -31,16 +31,19 @@ object Topology {
 
   /** ETL consumer (≙ consumer.py): source stream → decode/validate/enrich/
     * route → keyed PutRecords into the destination stream per route +
-    * dead-letter JSON under `errors/`. Each micro-batch is one pass: its
-    * tagged projection ([[SessionEtl.sinkProjection]], not cached) feeds
-    * the shuffle of [[ShardedLogWriter.writeRouted]] directly, which
-    * appends every destination stream and carries the dead letters to one
-    * extra reduce partition. `errors/` is written from that partition
-    * after the appends, reading the shuffle's map output, and only when
-    * the batch has dead letters: the source is scanned and decoded once,
-    * in two Spark jobs per batch, three with dead letters. Per-session_id
-    * order is preserved via (shard, sequence_number) ordering into the
-    * destination shards.
+    * dead-letter JSON under `errors/`. Each micro-batch is ONE map-only
+    * Spark job, one task per source shard slice: the task decodes its rows
+    * through [[SessionEtl.sinkProjection]] and appends each valid row to
+    * its destination shard itself ([[ShardedLogWriter.appendInPlace]]),
+    * with no shuffle and no sort. Per-session_id order holds because a key
+    * lives in one open source shard, the source's parent hold-back keeps a
+    * reshard's parent and child records in different batches, and a task
+    * reads its slice in sequence order. A task that sees dead letters
+    * writes them as one file, `errors/part-<queryId>-<batchId>-<partition>
+    * .json` (the lines Spark's JSON writer would write), so a replayed
+    * batch, which reads the same offsets into the same partitions,
+    * replaces its files instead of adding copies. A batch without dead
+    * letters writes nothing under `errors/`.
     */
   def startEtlConsumer(spark: SparkSession, sourceStream: String,
       destStreams: Map[String, String], errorsDir: String,
@@ -52,14 +55,15 @@ object Topology {
       .queryName("graft-etl-consumer")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // set by the streaming engine on the thread that runs this body;
+        // stable across restarts from the same checkpoint
+        val queryId = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
         val tagged = SessionEtl.sinkProjection(batch)
-        val deadLetters = ShardedLogWriter.SideOutput(SessionEtl.isDeadLetter,
-          SessionEtl.deadLetterColumns(tagged),
-          _.write.mode(SaveMode.Append).json(errorsDir))
-        ShardedLogWriter.writeRouted(tagged, col("route"), destStreams,
-          col("session_id"), col("data"), Seq(col("shard"), col("sequence_number")),
-          Some(deadLetters))
+        val deadLetters = ShardedLogWriter.SideLines(SessionEtl.deadLetterJson(tagged),
+          errorsDir, p => s"part-$queryId-$batchId-$p.json")
+        ShardedLogWriter.appendInPlace(tagged, col("route"), destStreams,
+          col("session_id"), col("data"), Some(deadLetters))
       }
       .start()
   }

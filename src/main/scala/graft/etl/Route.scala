@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * Reference: consumer.py:160-165, Solution.ipynb:522.
   *
   * Expressed as a routing column that the sinks split on in one pass:
-  * `ShardedLogWriter.writeRouted` writes every destination stream in one
-  * shuffle, and the file sink uses `partitionBy("route")`. The disjoint
-  * split is total (every record lands in exactly one route).
+  * `ShardedLogWriter.appendInPlace` appends each row to its route's
+  * destination stream from the task that decoded it, and the file sink uses
+  * `partitionBy("route")`. The disjoint split is total (every record lands
+  * in exactly one route).
   */
 object Route {
   val Usa = "usa"

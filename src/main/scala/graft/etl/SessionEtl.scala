@@ -109,9 +109,14 @@ object SessionEtl {
   def deadLetter(tagged: DataFrame): DataFrame =
     tagged.filter(isDeadLetter).drop(enrichedColumns: _*)
 
-  /** The columns of [[deadLetter]]. */
-  def deadLetterColumns(tagged: DataFrame): Seq[String] =
-    tagged.columns.toSeq.filterNot(enrichedColumns.contains)
+  /** On the invalid rows of a [[tag]]ged frame, the [[deadLetter]] row as
+    * one JSON line, as Spark's JSON writer writes it (the same generator:
+    * fields in column order, nulls omitted, timestamps in the session time
+    * zone); null on the valid rows.
+    */
+  def deadLetterJson(tagged: DataFrame): Column =
+    when(isDeadLetter, to_json(struct(
+      tagged.columns.toSeq.filterNot(enrichedColumns.contains).map(col): _*)))
 
   /** Full transform: both channels of one [[tag]]ged projection. Enriched
     * output columns: pass-through input columns (e.g. shard/sequence

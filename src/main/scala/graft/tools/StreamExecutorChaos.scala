@@ -22,20 +22,22 @@ import graft.streaming.EtlStream
   * actually happens):
   *
   *  - `shardedlog_topology` ([[Topology.startEtlConsumer]], the
-  *    PutRecords-style dest-stream path): `ShardedLogWriter.writeRouted` runs
-  *    raw `appendLines` in the tasks of the job that reads its shuffle, so a
-  *    task that is SIGKILLed AFTER appending but BEFORE registering
-  *    completion is retried and re-appends — the documented AT-LEAST-ONCE
-  *    contract (ShardedLogWrite.scala "at-least-once across epoch retries").
-  *    Required invariant: ZERO LOSS (every produced key delivered);
-  *    duplicates are recorded: the killed task may have appended a
-  *    prefix of its sorted run (whole lines, written in chunks) that the
-  *    retry appends again, never a torn record (the per-shard file lock
-  *    and line-aligned chunk writes guarantee line atomicity). The dead
-  *    letters are written by a later job from the same shuffle's map
-  *    output; a kill that loses map output between the two jobs makes
-  *    Spark recompute it from the batch's fixed source offsets, which
-  *    re-reads and re-decodes the batch but appends nothing again.
+  *    PutRecords-style dest-stream path): each micro-batch is one map-only
+  *    job whose source tasks decode their shard slice and append their own
+  *    rows (`ShardedLogWriter.appendInPlace`, raw `appendLines` in bounded
+  *    runs per destination shard). A task that is SIGKILLed after
+  *    appending one or more runs but before registering completion is
+  *    retried from its slice's start and re-appends those runs — the
+  *    documented AT-LEAST-ONCE contract of the log writer. The batch has no
+  *    shuffle, so there is no failure that writes nothing (a failed shuffle
+  *    fetch before the appends): any retried source task may duplicate.
+  *    Required invariant: ZERO LOSS
+  *    (every produced key delivered); duplicates are recorded: the killed
+  *    task may have appended any whole runs of its slice (whole lines,
+  *    written in chunks) that the retry appends again, never a torn record
+  *    (the per-shard file lock and line-aligned chunk writes guarantee line
+  *    atomicity). The retry rewrites its `errors/` file under the same
+  *    name, so dead letters do not duplicate.
   *  - `etlstream_filesink` ([[EtlStream.start]], the exactly-once
   *    upgrade): the JSON file sink goes through Spark's output committer
   *    (task temp files + rename on commit), so a killed task's partial

@@ -6,8 +6,11 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 import graft.SparkTestBase
-import graft.connector.shardedlog.{ShardedLog, ShardedLogOffset}
+import graft.connector.shardedlog.{ShardedLog, ShardedLogOffset, ShardedLogSource, ShardedLogWriter}
+import graft.etl.SessionEtl
 
 /** Full reference topology E2E (SURVEY.md §2.7): producer → source stream
   * → ETL consumer → routed destination streams → firehose file delivery,
@@ -156,7 +159,7 @@ class TopologySpec extends SparkTestBase {
     }, base => Files.createFile(Paths.get(s"$base/errors")).toString)
   }
 
-  test("a micro-batch runs two Spark jobs, three with dead letters") {
+  test("one Spark job per micro-batch, with or without dead letters") {
     val base = Files.createTempDirectory("graft-topo-jobs").toString
     val src = s"$base/source"; val usa = s"$base/usa"; val intl = s"$base/intl"
     val errors = new java.io.File(s"$base/errors")
@@ -198,7 +201,7 @@ class TopologySpec extends SparkTestBase {
       etl.processAllAvailable()
       val clean = jobsPerBatch()
       assert(clean.nonEmpty)
-      assert(clean.values.forall(_ <= 2), s"jobs per batch without dead letters: $clean")
+      assert(clean.values.forall(_ <= 1), s"jobs per batch without dead letters: $clean")
       val written = Option(errors.list()).toSeq.flatten
       assert(written.isEmpty, s"a batch without dead letters wrote $written")
 
@@ -209,7 +212,7 @@ class TopologySpec extends SparkTestBase {
       etl.processAllAvailable()
       val withDead = jobsPerBatch() -- clean.keySet
       assert(withDead.nonEmpty)
-      assert(withDead.values.forall(_ <= 3), s"jobs per batch with dead letters: $withDead")
+      assert(withDead.values.forall(_ <= 1), s"jobs per batch with dead letters: $withDead")
     } finally {
       etl.stop()
       sc.removeSparkListener(listener)
@@ -218,6 +221,55 @@ class TopologySpec extends SparkTestBase {
       .select($"payload", $"error").as[(String, String)].collect().toMap
     assert(errs == dead.toMap)
     assert(ShardedLog.endOffsets(usa).values.sum + ShardedLog.endOffsets(intl).values.sum == 21L)
+  }
+
+  test("dead-letter lines are byte for byte those of Spark's JSON writer") {
+    val base = Files.createTempDirectory("graft-topo-dlbytes").toString
+    val usa = s"$base/usa"; val intl = s"$base/intl"
+    Seq(usa, intl).foreach(ShardedLog.createStream(_, 2))
+    // quotes, control characters and non-ASCII text; one valid record
+    val payloads = dead.map(_._1) ++ Seq("say \"hi\"\u0001\t\u001f\n{",
+      "caf\u00e9 \u2603 \ud834\udd1e {", record("v0", "USA", 1, 1))
+    // a null key or arrival is omitted from the line; the arrivals carry
+    // milliseconds, zero milliseconds and a half-hour zone offset
+    val rows = payloads.zipWithIndex.map { case (p, i) =>
+      Row("shard-00000", i.toLong,
+        if (i == 1) null else new java.sql.Timestamp(1700000000000L + i * 3600123L * (i % 2)),
+        if (i == 2) null else s"k$i", p.getBytes("UTF-8"))
+    }
+    val schema = StructType(ShardedLogSource.schema.fields.map(_.copy(nullable = true)))
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try {
+      val tagged = SessionEtl.sinkProjection(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema))
+      ShardedLogWriter.appendInPlace(tagged, $"route",
+        Map("usa" -> usa, "international" -> intl), $"session_id", $"data",
+        Some(ShardedLogWriter.SideLines(SessionEtl.deadLetterJson(tagged),
+          s"$base/task", p => s"part-$p.json")))
+      SessionEtl.deadLetter(tagged).write.json(s"$base/spark")
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+
+    /** The bytes of the one JSON part file under `dir`. */
+    def partFile(dir: String): Array[Byte] = {
+      val parts = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+      assert(parts.length == 1, s"$dir: ${parts.toSeq}")
+      Files.readAllBytes(parts.head.toPath)
+    }
+    val task = partFile(s"$base/task")
+    val written = partFile(s"$base/spark")
+    assert(new String(task, "UTF-8") == new String(written, "UTF-8"))
+    assert(task.sameElements(written))
+    // one line per dead letter, each a root value with no separator
+    val lines = new String(task, "UTF-8").split("\n", -1).toSeq
+    assert(lines.last.isEmpty && lines.init.size == payloads.size - 1)
+    assert(lines.init.forall(_.startsWith("{\"shard\":")))
+    assert(lines(1).contains("\"partition_key\":\"k1\"") && !lines(1).contains("arrival"))
+    assert(!lines(2).contains("partition_key"))
+    assert(lines(0).contains("\"arrival_timestamp\":\"2023-11-15T03:43:20.000+05:30\""))
+    assert(lines(3).contains("\"arrival_timestamp\":\"2023-11-15T06:43:20.369+05:30\""))
+    assert(ShardedLog.endOffsets(usa).values.sum == 1L)
   }
 
   test("later micro-batches reuse the compiled ETL code") {

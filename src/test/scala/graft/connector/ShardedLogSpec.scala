@@ -540,6 +540,54 @@ class ShardedLogSpec extends SparkTestBase {
     assert(writers.size == 4, s"appending tasks (reduce partitions): $writers")
   }
 
+  test("in-place appender: four input partitions append to the same two shards at once") {
+    val dir = newStream(2)
+    // partition p holds keys k<p>-<j> only, each key's rows in order n;
+    // 2 KiB payloads make every task append several runs per shard, and
+    // every fifth key routes to "mars", which has no stream
+    val pad = "x" * 2048
+    val perPartition = 2000
+    val src = (0 until 4).flatMap { p =>
+      (0 until perPartition).map { i =>
+        val j = i % 40
+        val key = s"k$p-$j"
+        (key, i / 40, if (j % 5 == 0) "mars" else "log", s"$key:${i / 40}:$pad")
+      }
+    }
+    val batch = spark.sparkContext.parallelize(src, 4).toDF("key", "n", "route", "payload")
+    assert(batch.rdd.glom().collect().map(_.map(_.getString(0).takeWhile(_ != '-')).distinct.toSeq)
+      .toSeq == (0 until 4).map(p => Seq(s"k$p")), "one partition per key prefix")
+    ShardedLogWriter.appendInPlace(batch, $"route", Map("log" -> dir),
+      $"key", $"payload".cast("binary"))
+
+    val ends = ShardedLog.endOffsets(dir)
+    val records = ends.toSeq.flatMap { case (shard, end) =>
+      val rs = ShardedLog.read(dir, shard, 0L, end).toSeq
+      // dense sequence numbers: every append took whole lines
+      assert(rs.map(_.sequenceNumber) == (0L until end), shard)
+      rs
+    }
+    // no torn line: every record parses back to its key, counter and pad
+    records.foreach { r =>
+      val Array(key, n, rest) = new String(r.data, "UTF-8").split(":", 3)
+      assert(key == r.partitionKey && rest == pad && n.forall(_.isDigit), r.partitionKey)
+    }
+    assert(records.size == src.count(_._3 == "log"), "a route without a stream must write nothing")
+    assert(!records.exists(r => src.exists(s => s._1 == r.partitionKey && s._3 == "mars")))
+    val placed = records.map(_.partitionKey).distinct
+      .map(k => k -> ShardedLog.openShardFor(dir, k)).toMap
+    records.foreach(r => assert(r.shard == placed(r.partitionKey), r.partitionKey))
+    // four writers shared each shard
+    records.groupBy(_.shard).foreach { case (shard, rs) =>
+      assert(rs.map(_.partitionKey.takeWhile(_ != '-')).toSet.size == 4, shard)
+    }
+    // per key, log order == input order
+    records.groupBy(_.partitionKey).foreach { case (k, rs) =>
+      val ns = rs.sortBy(_.sequenceNumber).map(r => new String(r.data, "UTF-8").split(":")(1).toInt)
+      assert(ns == ns.indices, s"$k out of order")
+    }
+  }
+
   test("endOffsets right after appendLines reads no bytes") {
     val dir = newStream(1)
     val recs = (0 until 1000).map(i => (s"k-$i", s"payload-$i".getBytes("UTF-8"), 1000L + i))
