@@ -231,7 +231,9 @@ object ShardedLog {
     * OverlappingFileLockException instead of blocking, so two local-mode
     * writer tasks hitting the same shard would crash rather than queue.
     * The monitor serializes same-JVM writers; the channel lock then
-    * serializes cross-process ones.
+    * serializes cross-process ones, for as long as the process closes no
+    * other descriptor of the shard file (a POSIX record lock is released
+    * by the first close of any descriptor of the file in the process).
     */
   private val jvmLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -250,8 +252,10 @@ object ShardedLog {
     * and returns the first assigned sequence number. Lines are encoded as
     * bytes into a buffer of [[ChunkBytes]] (or one line, if a record is
     * larger) that is written whenever it fills, so memory is O(chunk)
-    * whatever the batch size. Only whole lines are written, so a writer
-    * that fails mid-batch leaves a prefix of the batch, never a torn line.
+    * whatever the batch size. Only whole lines are handed to `write`, so a
+    * writer that fails mid-batch leaves a prefix of the batch; the torn
+    * last line a writer killed inside a `write` can leave is cut by the
+    * next append ([[cutTornTail]]).
     *
     * Before it returns, the append stores the shard's new index entry
     * (length, mtime, lines, anchors), so the next `endOffsets` or `read`
@@ -266,11 +270,12 @@ object ShardedLog {
       val raf = new RandomAccessFile(file, "rw")
       val lock = raf.getChannel.lock()
       try {
-        val before = refreshIndex(file)
+        cutTornTail(raf)
+        val before = refreshIndex(file, raf)
         val start = raf.length()
         raf.seek(start)
-        // The index carries forward only from a newline-terminated end; an
-        // unterminated tail (external writer) is left to a full rescan.
+        // The index carries forward only from a cached, anchored end;
+        // anything else is left to a full rescan.
         val carry = start == 0L ||
           (before.len == start && before.anchors.containsKey(before.lines))
         val anchors = new java.util.TreeMap[Long, Long](before.anchors)
@@ -298,6 +303,30 @@ object ShardedLog {
         raf.close()
       }
     }
+  }
+
+  /** Cuts the unterminated tail a writer killed inside a chunk write leaves
+    * (a SIGKILL can end a `write` part-way), so the next line starts on a
+    * line boundary instead of gluing itself onto the torn bytes. Readers
+    * never served those bytes as a record, and the killed writer's retry
+    * appends the record again.
+    */
+  private def cutTornTail(raf: RandomAccessFile): Unit = {
+    var end = raf.length()
+    if (end == 0L) return
+    raf.seek(end - 1)
+    if (raf.read() == '\n') return
+    val buf = new Array[Byte](ChunkBytes)
+    while (end > 0L) {
+      val from = math.max(0L, end - buf.length)
+      raf.seek(from)
+      raf.readFully(buf, 0, (end - from).toInt)
+      var i = (end - from).toInt - 1
+      while (i >= 0 && buf(i) != '\n') i -= 1
+      if (i >= 0) { raf.setLength(from + i + 1); return }
+      end = from
+    }
+    raf.setLength(0L)
   }
 
   /** Bytes per append write; see [[appendLines]]. */
@@ -405,7 +434,12 @@ object ShardedLog {
   private val EmptyIndex =
     ShardIndex(0L, 0L, 0L, new java.util.TreeMap[Long, Long]())
 
-  private def refreshIndex(file: File): ShardIndex = {
+  /** `locked` is the descriptor of a caller that holds the shard's file
+    * lock: the scan reads through it, because closing any other descriptor
+    * of the file would release the process's lock (POSIX record locks).
+    */
+  private def refreshIndex(file: File,
+      locked: RandomAccessFile = null): ShardIndex = {
     val key = file.getCanonicalPath
     if (!file.exists()) { indexCache.remove(key); return EmptyIndex }
     val len = file.length()
@@ -430,15 +464,10 @@ object ShardedLog {
       if (cached.lines % IndexStep != 0L) anchors.remove(cached.lines)
     }
     anchors.put(0L, 0L)
-    val in = Files.newInputStream(file.toPath)
+    val in = if (locked != null) locked else new RandomAccessFile(file, "r")
     var lineStart = startByte // byte where line `n` starts
     val count = try {
-      var skipped = 0L
-      while (skipped < startByte) {
-        val s = in.skip(startByte - skipped)
-        if (s <= 0) throw new java.io.IOException(s"cannot seek $key to $startByte")
-        skipped += s
-      }
+      in.seek(startByte)
       var n = startLines
       var pos = startByte
       val buf = new Array[Byte](1 << 16)
@@ -458,7 +487,7 @@ object ShardedLog {
         read = in.read(buf)
       }
       n
-    } finally in.close()
+    } finally if (in ne locked) in.close()
     // Boundary anchor — where line `count` starts — is recorded only when
     // it is the exact file end (appendLines always newline-terminates).
     // A trailing unterminated line (external writer) leaves the boundary

@@ -5,11 +5,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,6 +35,8 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   *  - admission control caps each micro-batch at maxRecordsPerPoll records
   *    per shard (S3, `GetRecords(Limit=200)`, consumer.py:115);
   *  - also supports batch reads (whole-log scan) for debugging/backfill.
+  *
+  * The table is read-only: keyed writes go through [[ShardedLogWriter]].
   */
 class ShardedLogSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -57,19 +58,14 @@ object ShardedLogSource {
     StructField("data", BinaryType, nullable = false)))
 }
 
-class ShardedLogTable(streamDir: String) extends Table
-    with SupportsRead with SupportsWrite {
+class ShardedLogTable(streamDir: String) extends Table with SupportsRead {
   require(streamDir != null, "option 'path' (stream directory) is required")
   override def name(): String = s"sharded-log(`$streamDir`)"
   override def schema(): StructType = ShardedLogSource.schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.ACCEPT_ANY_SCHEMA)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new ShardedLogScan(streamDir, options.asScala.toMap)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ShardedLogWriteBuilder(streamDir, info)
 }
 
 /** Per-shard offset map; JSON round-trips through the checkpoint log. */

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{SessionDecode, WithoutClosingBrace}
 
@@ -137,18 +136,5 @@ object SessionEtl {
     tag(batch, dataCol, current_timestamp())
       .select((passThrough ++ sinkColumns).map(c =>
         if (c == "data") col(c).cast("binary").as(c) else col(c)): _*)
-  }
-
-  /** Runs a `foreachBatch` body over the batch's [[sinkProjection]],
-    * persisted for the length of the body, so every sink of the batch reads
-    * one decode of one source scan. The cache is freed when the body
-    * returns or throws. `data` is cached as binary: the columnar cache
-    * stores a binary column as is, where a string column pays dictionary
-    * and run-length statistics over values that are all distinct.
-    */
-  def withTaggedBatch(batch: DataFrame, dataCol: String = "data")(
-      body: DataFrame => Unit): Unit = {
-    val tagged = sinkProjection(batch, dataCol).persist(StorageLevel.MEMORY_AND_DISK)
-    try body(tagged) finally tagged.unpersist(blocking = false)
   }
 }

@@ -12,7 +12,6 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.{GraftSession, Provenance}
 import graft.app.Topology
 import graft.connector.shardedlog.{ShardedLog, ShardedLogSource}
-import graft.streaming.EtlStream
 
 /** Executor-loss chaos for the STREAMING topology (r11: completes the
   * process-boundary story — `ExecutorChaos` kills executors under batch
@@ -34,21 +33,24 @@ import graft.streaming.EtlStream
   *    Required invariant: ZERO LOSS
   *    (every produced key delivered); duplicates are recorded: the killed
   *    task may have appended any whole runs of its slice (whole lines,
-  *    written in chunks) that the retry appends again, never a torn record
-  *    (the per-shard file lock and line-aligned chunk writes guarantee line
-  *    atomicity). The retry rewrites its `errors/` file under the same
-  *    name, so dead letters do not duplicate.
-  *  - `etlstream_filesink` ([[EtlStream.start]], the exactly-once
-  *    upgrade): the JSON file sink goes through Spark's output committer
-  *    (task temp files + rename on commit), so a killed task's partial
-  *    output is discarded and the retry is the only visible write.
+  *    written in chunks) that the retry appends again, never a torn record:
+  *    a kill inside a chunk write can leave a torn last line, which no
+  *    reader counts and the next append under the per-shard file lock
+  *    cuts. The retry rewrites its `errors/` file under the same name, so
+  *    dead letters do not duplicate.
+  *  - `firehose_filesink` ([[Topology.startFirehose]], the topology's
+  *    exactly-once sink): the producer appends straight into a
+  *    destination stream and the Firehose delivers it through Spark's
+  *    streaming JSON file sink. A task's files count only once the batch
+  *    commits them to `_spark_metadata`, so a killed task's partial output
+  *    is never read and the retry is the only visible write.
   *    Required invariant: ZERO LOSS and ZERO DUPLICATES.
   *
   * Each trial produces unique-keyed session payloads at a steady offered
   * rate from the driver, SIGKILLs one `CoarseGrainedExecutorBackend` at
-  * two points mid-run (the standalone worker relaunches it), drains, and
-  * counts delivered lines vs distinct keys via the connector's batch
-  * read path.
+  * two points mid-run (the standalone worker relaunches it), drains the
+  * query (`processAllAvailable`), and counts delivered lines vs distinct
+  * keys with a Spark batch read of the trial's output.
   *
   * Usage: StreamExecutorChaos <outJson>
   * Env: SPARK_GRAFT_CHAOS_MASTER (default local-cluster[3,8,6144]),
@@ -57,44 +59,6 @@ import graft.streaming.EtlStream
   *      SPARK_GRAFT_CHAOS_KILL_AT_SEC (default "12,28").
   */
 object StreamExecutorChaos {
-
-  private def countLines(f: File): Long = {
-    if (!f.exists()) return 0L
-    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f))
-    try {
-      var n = 0L
-      val buf = new Array[Byte](1 << 16)
-      var r = in.read(buf)
-      while (r > 0) {
-        var i = 0
-        while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
-        r = in.read(buf)
-      }
-      n
-    } finally in.close()
-  }
-
-  private def streamLines(dir: String): Long =
-    ShardedLog.listShards(dir).map(s => countLines(new File(dir, s))).sum
-
-  /** Lines across committed `part-*` files under a batch-JSON output tree
-    * (skips `_temporary`/`_SUCCESS`) — the cheap drain poll; the final
-    * stats use a real Spark read.
-    */
-  private def jsonPartLines(dir: String): Long = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return 0L
-    var n = 0L
-    val walk = Files.walk(root)
-    try {
-      walk.forEach { p =>
-        val name = p.getFileName.toString
-        if (Files.isRegularFile(p) && name.startsWith("part-") &&
-          !p.toString.contains("_temporary")) n += countLines(p.toFile)
-      }
-    } finally walk.close()
-    n
-  }
 
   /** Valid session payload for [[graft.etl.SessionEtl]]; key sess-<i> is
     * globally unique per trial so distinct-key counts detect loss and
@@ -143,12 +107,11 @@ object StreamExecutorChaos {
 
     /** Run one trial: start `startQuery` over a fresh src stream, produce
       * for produceSec at offeredRps with SIGKILLs at killAtSec, drain
-      * until `deliveredLines()` quiesces at >= produced, then stop and
-      * return (produced, kills).
+      * what was produced, then stop and return (produced, kills).
       */
     def runTrial(trial: String, base: java.nio.file.Path,
-      startQuery: String => org.apache.spark.sql.streaming.StreamingQuery,
-      deliveredLines: () => Long): (Long, Seq[Long]) = {
+      startQuery: String => org.apache.spark.sql.streaming.StreamingQuery)
+      : (Long, Seq[Long]) = {
       val src = base.resolve("src").toString
       ShardedLog.createStream(src, 4)
       val query = startQuery(src)
@@ -199,18 +162,7 @@ object StreamExecutorChaos {
       stop.set(true); producer.join()
       val total = produced.get()
 
-      // drain: delivered must reach produced AND hold still for 3 samples
-      // (duplicates can push lines PAST produced — quiesce, don't equate)
-      val deadline = System.currentTimeMillis() + 180000
-      var last = -1L; var stable = 0
-      while (stable < 3 && System.currentTimeMillis() < deadline) {
-        val got = deliveredLines()
-        if (got >= total && got == last) stable += 1
-        else stable = 0
-        last = got
-        Thread.sleep(1000)
-      }
-      query.stop()
+      try query.processAllAvailable() finally query.stop()
       (total, kills.synchronized(kills.toSeq))
     }
 
@@ -224,8 +176,7 @@ object StreamExecutorChaos {
         src => Topology.startEtlConsumer(spark, src,
           Map("usa" -> dir("usa"), "international" -> dir("intl")),
           dir("errors"), dir("ckpt"), Trigger.ProcessingTime("1 second"),
-          maxRecordsPerPoll = 1000000),
-        () => streamLines(dir("usa")) + streamLines(dir("intl")))
+          maxRecordsPerPoll = 1000000))
       val delivered = Seq("usa", "intl").map { d =>
         spark.read.format(ShardedLogSource.ShortName)
           .option("path", dir(d)).load()
@@ -244,27 +195,23 @@ object StreamExecutorChaos {
         f"lines=$lines distinct=$keys dead=$dead dup=${lines - keys}")
     }
 
-    // ---- trial 2: EtlStream JSON file sink (exactly-once contract) ----
+    // ---- trial 2: Firehose JSON file sink (exactly-once contract) ----
     locally {
       val base = Files.createTempDirectory("graft-schaos-file")
       val out = base.resolve("out").toString
       val t0 = System.nanoTime()
-      val (total, kills) = runTrial("etlstream_filesink", base,
-        src => EtlStream.start(
-          Topology.readStream(spark, src, maxRecordsPerPoll = 1000000),
-          out, base.resolve("ckpt").toString,
-          trigger = Trigger.ProcessingTime("1 second"), keyPartitions = 6),
-        () => jsonPartLines(s"$out/data"))
-      val stats = spark.read.json(s"$out/data")
+      val (total, kills) = runTrial("firehose_filesink", base,
+        src => Topology.startFirehose(spark, src, out,
+          base.resolve("ckpt").toString, Trigger.ProcessingTime("1 second")))
+      val stats = spark.read.json(out)
         .agg(count(lit(1)).as("n"),
-          countDistinct(col("session_id")).as("k"))
+          countDistinct(col("partition_key")).as("k"))
         .collect()(0)
-      val dead = Try(spark.read.json(s"$out/errors").count()).getOrElse(0L)
-      results += TrialResult("etlstream_filesink", total, stats.getLong(0),
-        stats.getLong(1), dead, kills, (System.nanoTime() - t0) / 1e9)
-      println(f"[stream-chaos] etlstream_filesink produced=$total " +
+      results += TrialResult("firehose_filesink", total, stats.getLong(0),
+        stats.getLong(1), 0L, kills, (System.nanoTime() - t0) / 1e9)
+      println(f"[stream-chaos] firehose_filesink produced=$total " +
         f"lines=${stats.getLong(0)} distinct=${stats.getLong(1)} " +
-        f"dead=$dead dup=${stats.getLong(0) - stats.getLong(1)}")
+        f"dup=${stats.getLong(0) - stats.getLong(1)}")
     }
 
     def js(s: String): String =
@@ -297,7 +244,7 @@ object StreamExecutorChaos {
     require(lossy.isEmpty, "record LOSS under executor kill: " +
       lossy.map(r => s"${r.trial} lost ${r.produced - r.distinctKeys}")
         .mkString(", "))
-    results.find(_.trial == "etlstream_filesink").foreach { r =>
+    results.find(_.trial == "firehose_filesink").foreach { r =>
       require(r.lines == r.distinctKeys,
         s"file-sink path must be exactly-once, saw ${r.lines - r.distinctKeys} duplicates")
     }

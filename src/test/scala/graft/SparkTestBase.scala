@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +12,11 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** A fresh checkpoint directory for a stream a test starts; without one
+    * Spark makes a temporary directory and logs a WARN per query.
+    */
+  def newCheckpointDir(): String = Files.createTempDirectory("graft-ckpt").toString
 }
 
 object SparkTestBase {

@@ -53,6 +53,8 @@ class TopologySpec extends SparkTestBase {
     assert(usaRows.head.getString(0) == "a1")
     assert(usaRows.head.getString(1).contains("\"overall_product_quantity\": 3"))
     assert(usaRows.head.getString(1).contains("\"overall_in_shopping_cart\": 2"))
+    assert(usaRows.head.getString(1).contains("\"total_different_products\": 2"))
+    assert(usaRows.head.getString(1).contains("\"session_id\": \"a1\""))
 
     val intlRows = spark.read.format("graft.connector.shardedlog.ShardedLogSource")
       .option("path", intl).load()
@@ -71,7 +73,8 @@ class TopologySpec extends SparkTestBase {
     try fh.processAllAvailable() finally fh.stop()
     val delivered = spark.read.json(s"$base/s3-usa")
     assert(delivered.count() == 1)
-    assert(delivered.select("partition_key").as[String].collect().head == "a1")
+    assert(delivered.select("partition_key", "data").as[(String, String)]
+      .collect().toSeq == Seq(("a1", usaRows.head.getString(1))))
   }
 
   /** One payload per dead-letter class, with its class. */

@@ -56,6 +56,17 @@ class ShardedLogCorruptionSpec extends AnyFunSuite {
     assert(new String(got.last.data, "UTF-8") == "v8")
   }
 
+  test("torn tail: the next append starts on a fresh line, not on the torn bytes") {
+    val dir = newStream()
+    (0 until 10).foreach(i => put(dir, s"k$i", s"v$i"))
+    truncateTo(dir, shardFile(dir).length() - 5)
+    put(dir, "k9", "v9-retried")
+    assert(ShardedLog.endOffsets(dir)("shard-00000") == 10L)
+    val got = ShardedLog.read(dir, "shard-00000", 0L, 10L).toSeq
+    assert(got.map(_.sequenceNumber) == (0L until 10L))
+    assert(new String(got.last.data, "UTF-8") == "v9-retried")
+  }
+
   test("truncated segment: reading a committed range that shrank fails loudly") {
     val dir = newStream()
     (0 until 10).foreach(i => put(dir, s"k$i", s"v$i"))

@@ -24,7 +24,8 @@ class LateDataSpec extends SparkTestBase {
     val q = StreamingAnalytics.windowedStats(df, window_ = "10 minutes",
         watermark = "15 minutes")
       .writeStream.format("memory").queryName("late_data")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       mem.addData((ts(0), "click", 1.0))
       q.processAllAvailable()

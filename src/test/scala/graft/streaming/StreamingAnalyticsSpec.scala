@@ -19,7 +19,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
     val q = StreamingAnalytics.windowedStats(df, window_ = "10 minutes",
         watermark = "5 minutes")
       .writeStream.format("memory").queryName("win_stats")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       mem.addData((ts(0), "click", 1.0), (ts(5), "click", 2.0))
       q.processAllAvailable()
@@ -40,7 +41,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
     val out = StreamingAnalytics.sessionize(mem.toDS(), gapSeconds = 300,
       watermark = "1 minute")
     val q = out.writeStream.format("memory").queryName("stream_sessions")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // user 1: two events 2 min apart (one session)
       mem.addData(SessionEvent(1L, ts(0), 1.0), SessionEvent(1L, ts(2), 2.0))
@@ -66,7 +68,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
     val out = StreamingAnalytics.sessionize(mem.toDS(), gapSeconds = 300,
       watermark = "0 seconds")
     val q = out.writeStream.format("memory").queryName("stream_sessions2")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // two bursts 30 min apart in ONE batch → first session emitted
       // immediately on the in-batch gap split
@@ -88,7 +91,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
       purchases.toDF().toDF("user_id", "purchase_ts", "purchase_value"),
       windowSeconds = 600, watermark = "1 minute")
     val q = joined.writeStream.format("memory").queryName("attribution")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       clicks.addData((1L, ts(0), 100L), (2L, ts(0), 200L))
       // user 1 buys 5 min after the click (inside 10-min window);
@@ -115,7 +119,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
         mem.toDF().toDF("user_id", "ts", "value"),
         gap = "10 minutes", watermark = "1 minute")
       .writeStream.format("memory").queryName("session_windows")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // user 1: events at t0, t5, t12 — one session (each gap < 10 min,
       // the t5 event EXTENDS the window, exercising state merge);
@@ -149,7 +154,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "segment")
     val q = StreamingAnalytics.enrichWithDimension(events, dim, "user_id")
       .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       mem.addData((1L, 10.0), (3L, 7.0))
       q.processAllAvailable()
@@ -173,7 +179,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
     val events = mem.toDF().toDF("user_id", "value")
     val q = StreamingAnalytics.withIngestMetrics(events)
       .writeStream.format("memory").queryName("observed")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       mem.addData((1L, 10.5), (null, 2.5), (3L, 7.0))
       q.processAllAvailable()
@@ -196,7 +203,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
       purchases.toDF().toDF("user_id", "purchase_ts", "purchase_value"),
       windowSeconds = 600, watermark = "1 minute")
     val q = joined.writeStream.format("memory").queryName("attribution_outer")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       clicks.addData((1L, ts(0), 100L), (2L, ts(0), 200L))
       purchases.addData((1L, ts(5), 9.99)) // user 2 never converts
@@ -229,7 +237,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
       purchases.toDF().toDF("user_id", "purchase_ts", "purchase_value"),
       windowSeconds = 600, watermark = "1 minute")
     val q = joined.writeStream.format("memory").queryName("attribution_semi")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       clicks.addData((1L, ts(0), 100L), (2L, ts(0), 200L))
       // user 1 converts TWICE inside the window; user 2 never converts —
@@ -259,7 +268,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
       .select(col("window.start").as("bucket"), explode(col("sketch"))
         .as(Seq("item", "est_count")))
       .writeStream.format("memory").queryName("hh_stream")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       mem.addData((ts(0), "a"), (ts(1), "a"), (ts(2), "b"))
       q.processAllAvailable()
@@ -286,7 +296,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
       .agg(hll(col("uid")).as("regs"))
       .select(col("window.start").as("bucket"), col("regs"))
       .writeStream.format("memory").queryName("hll_stream")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // 300 distinct users, some repeated — state per window is 64 bytes
       // of registers regardless of cardinality. (n >> m: the raw-estimate
@@ -313,7 +324,8 @@ class StreamingAnalyticsSpec extends SparkTestBase {
     val out = StreamingAnalytics.dedupEvents(df, Seq("event_id"),
       watermark = "5 minutes")
     val q = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.ProcessingTime(0)).start()
     try {
       mem.addData((1L, ts(0), "a"), (1L, ts(0), "a-dup"), (2L, ts(1), "b"))
       q.processAllAvailable()
